@@ -5,12 +5,13 @@ Neo4j MERGE semantics re-expressed relationally:
 
 * node MERGE on (name, type) — last-writer SET wins (graph_db.py:81-88):
   window keep-last per key.
-* edge MERGE on (src, type, dst) with node MATCH by NAME + session
-  (graph_db.py:131-134): inner-join both endpoints against the node set;
-  dangling edges silently no-op exactly like a failed Cypher MATCH.
-* event nodes MERGE on (name, type) + one INVOLVES edge per participant,
-  where the participant must MATCH an entity node by name
-  (graph_db.py:96-119): explode + semi-join.
+* edge MERGE on (src, type, dst): window keep-last per key. The
+  reference's silent MATCH-miss on an endpoint that is not a node
+  (graph_db.py:131-134) cannot happen within a run, so no join
+  reproduces it: every endpoint is an entity text (V2, event
+  participants) and every entity text is a node name (D3).
+* event nodes MERGE on (name, type) + one INVOLVES edge per participant
+  (graph_db.py:96-119): window keep-last + explode.
 * session clear (graph_db.py:147-151) = partition-predicate delete.
 
 Tables write as parquet partitioned by session bucket; with an Iceberg
@@ -46,41 +47,36 @@ def build_nodes(entities: DataFrame, session_id: str = "batch") -> DataFrame:
     )
 
 
-def build_edges(triples: DataFrame, nodes: DataFrame, session_id: str = "batch") -> DataFrame:
-    """D4 + S5 — dedup on (src, type, dst) keeping the last writer, then
-    drop edges whose endpoints have no node (the reference's silent
-    MATCH-miss, graph_db.py:131-134 — matching is by NAME only)."""
+def build_edges(triples: DataFrame, session_id: str = "batch") -> DataFrame:
+    """D4 + S5 — dedup on (src, type, dst) keeping the last writer. No
+    endpoint needs anchoring against the nodes: a validated triple's
+    endpoints are entity texts of its document, and every entity text is
+    a node name, so the reference's MATCH-miss (graph_db.py:131-134)
+    never fires within a run."""
     w = Window.partitionBy("source", "type", "target").orderBy(F.col("document_id").desc())
-    deduped = (
+    return (
         triples.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    names = nodes.select(F.col("name")).distinct()
-    anchored = (
-        deduped.join(names.withColumnRenamed("name", "source"), "source", "left_semi")
-        .join(names.withColumnRenamed("name", "target"), "target", "left_semi")
-    )
-    return anchored.select(
-        F.col("source").alias("src"),
-        "type",
-        F.col("target").alias("dst"),
-        "reason",
-        "confidence",
-        "verb",
-        "date",
-        "amount",
-        "source_sentence",
-        "document_id",
-        F.lit(session_id).alias("session_id"),
+        .select(
+            F.col("source").alias("src"),
+            "type",
+            F.col("target").alias("dst"),
+            "reason",
+            "confidence",
+            "verb",
+            "date",
+            "amount",
+            "source_sentence",
+            "document_id",
+            F.lit(session_id).alias("session_id"),
+        )
     )
 
 
-def build_event_nodes_and_edges(events: DataFrame, nodes: DataFrame, session_id: str = "batch") -> tuple[DataFrame, DataFrame]:
-    """S6 — event nodes (MERGE on name+type, last writer) and INVOLVES
-    edges to participants that resolve to entity nodes by name."""
+def build_event_nodes(events: DataFrame, session_id: str = "batch") -> DataFrame:
+    """S6 — event nodes: MERGE on (name, event_type), last writer wins."""
     w = Window.partitionBy("name", "event_type").orderBy(F.col("document_id").desc())
-    event_nodes = (
+    return (
         events.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
@@ -95,10 +91,13 @@ def build_event_nodes_and_edges(events: DataFrame, nodes: DataFrame, session_id:
             F.lit(session_id).alias("session_id"),
         )
     )
-    names = nodes.select("name").distinct()
-    involves = (
+
+
+def build_involves(events: DataFrame, session_id: str = "batch") -> DataFrame:
+    """S6 — one INVOLVES edge per (event, participant); participants are
+    entity texts, so every edge resolves (see build_edges)."""
+    return (
         events.select("document_id", "name", F.explode("participants").alias("participant"))
-        .join(names.withColumnRenamed("name", "participant"), "participant", "left_semi")
         .select(
             F.col("name").alias("src"),
             F.lit("INVOLVES").alias("type"),
@@ -114,7 +113,6 @@ def build_event_nodes_and_edges(events: DataFrame, nodes: DataFrame, session_id:
         )
         .dropDuplicates(["src", "type", "dst"])
     )
-    return event_nodes, involves
 
 
 def insights(nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -42,7 +42,7 @@ from ..operators.extraction import (
     force_detect_hits_from_documents,
     triples_from_kernel,
 )
-from ..operators.graph import build_edges, build_event_nodes_and_edges, build_nodes
+from ..operators.graph import build_edges, build_involves, build_nodes
 from ..operators.relationships import (
     attach_sentence_and_metadata,
     candidate_relationships,
@@ -293,9 +293,7 @@ def run_pipeline(
         events = ckpt.stage("events", lambda: extract_events(kernel_rows, entities, sent_meta))
 
     nodes = build_nodes(entities, session_id)
-    edges = build_edges(triples, nodes, session_id)
-    event_nodes, involves = build_event_nodes_and_edges(events, nodes, session_id)
-    all_edges = edges.unionByName(involves)
+    edges = build_edges(triples, session_id).unionByName(build_involves(events, session_id))
 
     return PipelineResult(
         kernel_rows=kernel_rows,
@@ -303,6 +301,6 @@ def run_pipeline(
         triples=triples,
         events=events,
         nodes=nodes,
-        edges=all_edges,
+        edges=edges,
         lineage=ckpt.lineage,
     )
