@@ -1600,8 +1600,8 @@ def _q_canonicalize_incr(spark, sf_dir):
 
 def _q_kg_incremental(spark, sf_dir):
     # incremental KG maintenance (plans/incremental.py): v1 = the golden
-    # corpus minus two conversations, fully built into a manifest-mode
-    # GraphStore; incremental_update diffs v1 against the full corpus,
+    # corpus minus two conversations, fully built into a GraphStore;
+    # incremental_update diffs v1 against the full corpus,
     # re-extracts ONLY the two added conversations, and MERGEs them in.
     # The store's non-INVOLVES edges must then equal the full corpus's
     # triple set — the same golden literal kg_triples pins.
@@ -1615,9 +1615,7 @@ def _q_kg_incremental(spark, sf_dir):
     v2 = golden_transcripts(spark)
     convs = sorted(r[0] for r in v2.select("conv_id").distinct().collect())
     v1 = v2.filter(~F.col("conv_id").isin(convs[0], convs[-1]))
-    store = GraphStore(
-        spark, tempfile.mkdtemp(prefix="kgb_incr_"), n_buckets=8, commit_mode="manifest"
-    )
+    store = GraphStore(spark, tempfile.mkdtemp(prefix="kgb_incr_"), n_buckets=8)
     res1 = run_pipeline(spark, v1, persist=False)
     store.upsert_nodes(res1.nodes)
     store.upsert_edges(res1.edges)
@@ -1637,7 +1635,7 @@ def _q_kg_incremental_multi(spark, sf_dir):
     # round-4 verdict ask #7: incremental maintenance as a 3-snapshot
     # torture sequence — an ADD, a REMOVE, and a REMOVED-THEN-RE-ADDED
     # conv_id — each step a diff-pruned incremental_update into the same
-    # manifest-mode store. The sequence uses whole golden conversations
+    # store. The sequence uses whole golden conversations
     # (every add/re-add at full content), so the MERGE-accumulated final
     # state equals the full corpus's triple set and the query shares the
     # golden kg_incremental oracle. MERGE-accumulate equality under EDITS
@@ -1656,9 +1654,7 @@ def _q_kg_incremental_multi(spark, sf_dir):
     v1 = full.filter(~F.col("conv_id").isin(a, c))  # A, C absent
     v2 = full.filter(~F.col("conv_id").isin(b, c))  # A added, B removed
     v3 = full  # B re-added (remove-then-re-add), C added
-    store = GraphStore(
-        spark, tempfile.mkdtemp(prefix="kgb_incr3_"), n_buckets=8, commit_mode="manifest"
-    )
+    store = GraphStore(spark, tempfile.mkdtemp(prefix="kgb_incr3_"), n_buckets=8)
     res1 = run_pipeline(spark, v1, persist=False)
     store.upsert_nodes(res1.nodes)
     store.upsert_edges(res1.edges)

@@ -1,10 +1,13 @@
-"""Small-file compaction for parquet tables: streaming micro-batches and
-incremental bucket upserts (sources/graph_store.py) accrete many small
-files per partition; scans then pay per-file open/footer costs and the
-driver pays listing costs. This maintenance pass rewrites only the
-partition directories whose files are small/fragmented, leaving every
-other partition's files byte-identical — the same contract as the
-bucketed upsert.
+"""Small-file compaction for parquet tables: streaming micro-batches
+accrete many small files per partition; scans then pay per-file
+open/footer costs and the driver pays listing costs. This maintenance
+pass rewrites only the partition directories whose files are
+small/fragmented, leaving every other partition's files byte-identical.
+
+Not for GraphStore roots (sources/graph_store.py): their commit
+directories are immutable and named by a manifest, so compacting one in
+place would rewrite files a reader may be listing. A compacted graph-store
+bucket has to be a new commit plus a manifest swap.
 
 Scale shape: each partition directory compacts independently (read just
 that directory, coalesce to ceil(bytes/target), stage-then-rename), so

@@ -14,14 +14,14 @@ ABFS) the cluster's Spark jobs already use, no extra Python deps.
 
 Atomicity, stated honestly:
 
-* POSIX ``replace``/``rename`` are atomic.
+* POSIX ``write_text_atomic`` stages a temp file and moves it into
+  place with ``os.replace`` — atomic.
 * The Hadoop backend's ``write_text_atomic`` stages a temp file and
   renames with ``FileContext.rename(OVERWRITE)`` — atomic on HDFS.
 * On S3-style object stores rename is copy+delete, so the single-file
   pointer swap degrades to last-writer-wins with a small window. A real
-  object-store deployment should put the manifest PTR behind a
-  conditional-PUT catalog — which is exactly what the Iceberg path
-  (``iceberg_store.IcebergGraphStore``) provides; this shim makes the
+  object-store deployment should put the manifest pointer behind a
+  conditional-PUT catalog (SCALE.md §4); this shim makes the
   parquet-backed store RUN there, with that caveat documented instead
   of silently crashing on ``os.rename``.
 
@@ -73,9 +73,6 @@ class PosixFileIO:
     def append_text(self, path: str, text: str) -> None:
         with open(self._local(path), "a") as fh:
             fh.write(text)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(self._local(src), self._local(dst))
 
     def rmtree(self, path: str) -> None:
         p = self._local(path)
@@ -145,10 +142,6 @@ class HadoopFileIO:
         used for the lineage manifest (KBs)."""
         prev = self.read_text(path) if self.exists(path) else ""
         self.write_text_atomic(path, prev + text)
-
-    def rename(self, src: str, dst: str) -> None:
-        if not self._fs(src).rename(self._p(src), self._p(dst)):
-            raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def _rename_overwrite(self, src: str, dst: str) -> None:
         """FileContext.rename(OVERWRITE): atomic replace on HDFS (and the

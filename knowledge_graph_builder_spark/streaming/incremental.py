@@ -115,7 +115,8 @@ def stream_kg_to_store(
     skips cleanly-retried batches, and a crash between upsert and mark
     re-merges the same content, which the keyed last-writer dedup makes
     value-idempotent. Streaming analog of the reference's per-request
-    save_graph_data transaction (graph_db.py:49-72). Returns the query."""
+    save_graph_data transaction (graph_db.py:49-72). Superseded commit
+    directories are vacuumed after every batch. Returns the query."""
     from ..sources.graph_store import BatchLedger, GraphStore
 
     import hashlib
@@ -141,6 +142,12 @@ def stream_kg_to_store(
         finally:
             res.kernel_rows.unpersist()
         ledger.mark(batch_id)
+        # each batch's commit supersedes the touched buckets' old commit
+        # dirs; reclaiming them here keeps the store the size of the graph,
+        # not of the number of batches. A crash before this line leaves
+        # orphans the next batch's vacuum removes.
+        store.vacuum("nodes")
+        store.vacuum("edges")
 
     writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
     if available_now:

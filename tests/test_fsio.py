@@ -27,7 +27,7 @@ def test_io_for_selects_backend(spark):
 @pytest.mark.parametrize("backend", ["posix", "hadoop"])
 def test_backends_roundtrip(spark, tmp_path, backend):
     """Same contract on both backends: mkdirs/exists/write-atomic/read/
-    list/rename/rmtree, plus atomic overwrite of an existing file."""
+    list/rmtree, plus atomic overwrite of an existing file."""
     io = PosixFileIO() if backend == "posix" else HadoopFileIO(spark)
     root = (str(tmp_path) if backend == "posix" else f"file:{tmp_path}") + "/store"
     assert not io.exists(root)
@@ -49,18 +49,16 @@ def test_backends_roundtrip(spark, tmp_path, backend):
 
     io.makedirs(f"{root}/commit-1/_bucket=3")
     assert "commit-1" in io.listdir(root)
-    io.rename(f"{root}/commit-1", f"{root}/commit-2")
-    assert io.isdir(f"{root}/commit-2/_bucket=3")
-    assert "commit-1" not in io.listdir(root)
+    assert io.isdir(f"{root}/commit-1/_bucket=3")
 
-    io.rmtree(f"{root}/commit-2")
-    assert not io.exists(f"{root}/commit-2")
+    io.rmtree(f"{root}/commit-1")
+    assert not io.exists(f"{root}/commit-1")
     # rmtree of a missing path is a no-op, not an error
     io.rmtree(f"{root}/never-existed")
 
 
 def test_manifest_graphstore_through_hadoop_backend(spark, tmp_path):
-    """The full manifest-mode MERGE protocol running with every metadata
+    """The full manifest MERGE protocol running with every metadata
     operation routed through the Hadoop FileSystem (file: URI): upsert,
     last-writer-wins re-upsert, manifest swap, vacuum of superseded
     commit dirs."""
@@ -68,7 +66,7 @@ def test_manifest_graphstore_through_hadoop_backend(spark, tmp_path):
 
     root = f"file:{tmp_path}/graph"
     io = HadoopFileIO(spark)
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest", io=io)
+    store = GraphStore(spark, root, n_buckets=4, io=io)
 
     nodes1 = spark.createDataFrame(
         [("Acme", "ORG", "s1"), ("Ada", "PERSON", "s1")],
@@ -100,7 +98,7 @@ def test_manifest_graphstore_through_hadoop_backend(spark, tmp_path):
     live = set(manifest["buckets"].values())
     assert set(removed).isdisjoint(live)
     # reopen from a fresh store object: state persists via the manifest
-    store2 = GraphStore(spark, root, n_buckets=4, commit_mode="manifest", io=io)
+    store2 = GraphStore(spark, root, n_buckets=4, io=io)
     assert store2.nodes().count() == 3
     store2.clear_session("s1")
     assert {r.name for r in store2.nodes().collect()} == {"Acme"}

@@ -1,22 +1,22 @@
-"""Manifest-pointer commit protocol for GraphStore (commit_mode="manifest").
+"""Manifest-pointer commit protocol of GraphStore.
 
-The object-store-safe alternative to the POSIX bucket-directory swap:
-immutable commit directories + one atomically replaced manifest file
-(the Iceberg metadata-pointer pattern). These tests pin the contract:
+Immutable commit directories + one atomically replaced manifest file
+(the metadata-pointer pattern). These tests pin the contract:
 
-* parity with rename mode (same upserts -> same MERGE state);
+* MERGE state (same upserts -> the literal last-writer state);
 * data-file immutability (an upsert never rewrites or renames a
   referenced file — only the manifest pointer moves);
 * crash safety (an orphan commit dir without a manifest swap is
   invisible to readers and reclaimed by vacuum);
-* history/as-of, clear_session, and legacy-layout migration all work
-  under the manifest protocol.
+* history/as-of, clear_session and reopening work, and a table
+  directory without a manifest (an older layout) is refused.
 """
 
 import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_builder_spark.sources.graph_store import GraphStore
@@ -33,18 +33,16 @@ def _state(store):
     }
 
 
-def test_manifest_mode_matches_rename_mode(spark, tmp_path):
+def test_manifest_upserts_merge_last_writer_wins(spark, tmp_path):
     batches = [
         [("Apple", "ORG", "s1"), ("Jobs", "PERSON", "s1")],
         [("Apple", "ORG", "s2"), ("MSFT", "ORG", "s2")],  # update + insert
         [("Jobs", "PERSON", "s3")],
     ]
-    a = GraphStore(spark, str(tmp_path / "rename"), n_buckets=8)
-    b = GraphStore(spark, str(tmp_path / "manifest"), n_buckets=8, commit_mode="manifest")
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=8)
     for batch in batches:
-        a.upsert_nodes(_nodes_df(spark, batch))
-        b.upsert_nodes(_nodes_df(spark, batch))
-    assert _state(a) == _state(b) == {
+        store.upsert_nodes(_nodes_df(spark, batch))
+    assert _state(store) == {
         ("Apple", "ORG"): "s2",
         ("Jobs", "PERSON"): "s3",
         ("MSFT", "ORG"): "s2",
@@ -55,7 +53,7 @@ def test_manifest_upsert_never_touches_referenced_files(spark, tmp_path):
     """Immutability: files referenced by the pre-upsert manifest are
     byte-identical afterwards; the commit only swaps the pointer."""
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=8, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=8)
     store.upsert_nodes(
         _nodes_df(spark, [(f"n{i}", "ORG", "s1") for i in range(64)])
     )
@@ -81,7 +79,7 @@ def test_manifest_upsert_never_touches_referenced_files(spark, tmp_path):
 
 def test_manifest_crash_orphan_is_invisible_and_vacuumable(spark, tmp_path):
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=4)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     good = _state(store)
 
@@ -102,7 +100,7 @@ def test_manifest_crash_orphan_is_invisible_and_vacuumable(spark, tmp_path):
 
 def test_manifest_vacuum_reclaims_superseded_commits(spark, tmp_path):
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=2, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=2)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     # same key again: its bucket's pointer moves to the new commit, fully
     # superseding the first commit directory
@@ -115,7 +113,7 @@ def test_manifest_vacuum_reclaims_superseded_commits(spark, tmp_path):
 
 
 def test_manifest_clear_session(spark, tmp_path):
-    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4, commit_mode="manifest")
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1"), ("MSFT", "ORG", "s2")]))
     store.clear_session("s1")
     assert _state(store) == {("MSFT", "ORG"): "s2"}
@@ -126,9 +124,7 @@ def test_manifest_clear_session(spark, tmp_path):
 
 
 def test_manifest_history_mode_as_of(spark, tmp_path):
-    store = GraphStore(
-        spark, str(tmp_path / "g"), n_buckets=4, keep_history=True, commit_mode="manifest"
-    )
+    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4, keep_history=True)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     seq1 = store.current_seq("nodes")
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s2")]))
@@ -146,7 +142,7 @@ def test_manifest_upsert_into_unseen_bucket(spark, tmp_path):
     read path returned a frame without _bucket and the unionByName with
     the new batch failed with NUM_COLUMNS_MISMATCH."""
     root = str(tmp_path / "g")
-    store = GraphStore(spark, root, n_buckets=64, commit_mode="manifest")
+    store = GraphStore(spark, root, n_buckets=64)
     store.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
     manifest = json.load(open(f"{root}/nodes.manifest.json"))
     seen = set(manifest["buckets"])
@@ -171,16 +167,13 @@ def test_manifest_upsert_into_unseen_bucket(spark, tmp_path):
 
 
 def test_reopen_manifest_store_with_default_mode_keeps_writing(spark, tmp_path):
-    """Regression (round-4 advice): a store CREATED in manifest mode but
-    REOPENED with the default commit_mode='rename' used to write through
-    the rename path while reads resolved via the stale manifest —
-    silently losing every post-reopen write. The table's on-disk layout
-    now dictates the protocol: a manifest table stays manifest."""
+    """A reopened store resolves reads and writes through the same
+    manifest: post-reopen upserts and clear_session land."""
     root = str(tmp_path / "g")
-    first = GraphStore(spark, root, n_buckets=8, commit_mode="manifest")
+    first = GraphStore(spark, root, n_buckets=8)
     first.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
 
-    reopened = GraphStore(spark, root, n_buckets=8)  # default: rename
+    reopened = GraphStore(spark, root, n_buckets=8)
     reopened.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s2"), ("MSFT", "ORG", "s2")]))
     assert _state(reopened) == {("Apple", "ORG"): "s2", ("MSFT", "ORG"): "s2"}
     # and clear_session through the reopened handle also lands
@@ -188,27 +181,16 @@ def test_reopen_manifest_store_with_default_mode_keeps_writing(spark, tmp_path):
     assert reopened.nodes().count() == 0
 
 
-def test_manifest_migrates_legacy_layout(spark, tmp_path):
-    """Opening a rename-era store with commit_mode='manifest' migrates on
-    first upsert; subsequent reads resolve via the manifest."""
+def test_table_dir_without_manifest_is_refused(spark, tmp_path):
+    """Older stores kept each table in <root>/<table>/_bucket=K with no
+    manifest. Opening one must fail loudly: reads go through the manifest
+    only, so it would otherwise look like an empty graph."""
     root = str(tmp_path / "g")
-    legacy = GraphStore(spark, root, n_buckets=4)
-    legacy.upsert_nodes(_nodes_df(spark, [("Apple", "ORG", "s1")]))
+    old = _nodes_df(spark, [("Apple", "ORG", "s1")]).withColumn("_bucket", F.lit(0))
+    old.write.partitionBy("_bucket").parquet(f"{root}/nodes")
+    with pytest.raises(ValueError, match="nodes.manifest.json"):
+        GraphStore(spark, root, n_buckets=4)
+    # manifest commits are the only protocol a store can be opened with
+    with pytest.raises(ValueError, match="commit_mode"):
+        GraphStore(spark, str(tmp_path / "fresh"), commit_mode="swap")
 
-    store = GraphStore(spark, root, n_buckets=4, commit_mode="manifest")
-    store.upsert_nodes(_nodes_df(spark, [("MSFT", "ORG", "s1")]))
-    assert _state(store) == {("Apple", "ORG"): "s1", ("MSFT", "ORG"): "s1"}
-    manifest = json.load(open(f"{root}/nodes.manifest.json"))
-    assert manifest["buckets"]  # manifest now owns the table
-
-
-def test_rename_mode_refuses_object_store_roots(spark):
-    """Rename-mode commits need atomic directory rename; object stores
-    emulate it as copy+delete (torn commits on crash). The constructor
-    must refuse rather than run unsafely; manifest mode is the documented
-    object-store path (the guard fires before any I/O, so no real bucket
-    is needed)."""
-    import pytest
-
-    with pytest.raises(ValueError, match="atomic directory rename"):
-        GraphStore(spark, "s3a://bucket/graph", commit_mode="rename")

@@ -691,9 +691,11 @@ def test_k_core_peels_to_fixpoint(spark):
 
 def test_graph_store_bucketed_upsert_leaves_untouched_buckets_byte_identical(spark, tmp_path):
     """Scale contract: an upsert rewrites ONLY the hash buckets its batch
-    touches — cost scales with batch size, not store size."""
-    import glob
+    touches — cost scales with batch size, not store size. The commit
+    writes one new bucket directory and moves one manifest pointer; every
+    other bucket keeps pointing at the same, byte-identical files."""
     import hashlib
+    import json
     import os
 
     root = str(tmp_path / "g")
@@ -703,47 +705,44 @@ def test_graph_store_bucketed_upsert_leaves_untouched_buckets_byte_identical(spa
     )
     store.upsert_nodes(nodes)
 
-    def bucket_state():
+    def manifest():
+        with open(f"{root}/nodes.manifest.json") as fh:
+            return json.load(fh)["buckets"]
+
+    def bucket_bytes(buckets):
+        # bucket -> {file name: sha256} of the files the manifest names
         out = {}
-        for bdir in glob.glob(f"{root}/nodes/_bucket=*"):
-            h = hashlib.md5()
-            for f in sorted(glob.glob(bdir + "/*")):
-                with open(f, "rb") as fh:
-                    h.update(os.path.basename(f).encode())
-                    h.update(fh.read())
-            out[os.path.basename(bdir)] = h.hexdigest()
+        for b, cdir in buckets.items():
+            d = f"{root}/nodes._commits/{cdir}/_bucket={b}"
+            out[b] = {
+                f: hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+                for f in sorted(os.listdir(d))
+            }
         return out
 
-    before = bucket_state()
+    before = manifest()
     assert len(before) > 1  # keys actually spread over buckets
+    bytes_before = bucket_bytes(before)
     one = spark.createDataFrame([("n3", "ORG", "s2")], "name string, type string, session_id string")
     store.upsert_nodes(one)
-    after = bucket_state()
+    after = manifest()
 
-    changed = {k for k in before if before[k] != after.get(k)}
-    assert len(changed) == 1  # exactly the batch's bucket was rewritten
+    assert after.keys() == before.keys()
+    moved = [b for b in before if before[b] != after[b]]
+    assert len(moved) == 1  # exactly the batch's bucket pointer moved
+    bytes_after = bucket_bytes(after)
+    for b in before:
+        if b not in moved:
+            assert bytes_after[b] == bytes_before[b]
+    commit_dir = f"{root}/nodes._commits/{after[moved[0]]}"
+    # the commit holds only the touched bucket
+    assert [e for e in os.listdir(commit_dir) if e.startswith("_bucket=")] == [
+        f"_bucket={moved[0]}"
+    ]
     out = store.nodes()
     assert out.count() == 64  # MERGE, not append
     assert out.filter("name = 'n3'").collect()[0]["session_id"] == "s2"  # last writer
     assert out.filter("name = 'n5'").collect()[0]["session_id"] == "s1"  # untouched
-
-
-def test_graph_store_legacy_table_migrates_to_buckets(spark, tmp_path):
-    """A round-1 (unbucketed) store upgrades in place on first upsert."""
-    root = str(tmp_path / "g")
-    legacy = spark.createDataFrame(
-        [("Apple", "ORG", "s1", 0)], "name string, type string, session_id string, _batch_seq int"
-    )
-    legacy.write.parquet(f"{root}/nodes")
-    store = GraphStore(spark, root, n_buckets=8)
-    store.upsert_nodes(
-        spark.createDataFrame([("MSFT", "ORG", "s1")], "name string, type string, session_id string")
-    )
-    rows = {r.name: r.session_id for r in store.nodes().collect()}
-    assert rows == {"Apple": "s1", "MSFT": "s1"}
-    import glob
-
-    assert glob.glob(f"{root}/nodes/_bucket=*")  # now bucketed
 
 
 def test_viz_color_map_matches_reference(spark):

@@ -206,7 +206,7 @@ def test_incremental_three_snapshot_torture(spark, tmp_path):
         .unionByName(readded)
     )
 
-    store = GraphStore(spark, str(tmp_path / "torture"), n_buckets=4, commit_mode="manifest")
+    store = GraphStore(spark, str(tmp_path / "torture"), n_buckets=4)
     res1 = run_pipeline(spark, s1, persist=False)
     store.upsert_nodes(res1.nodes)
     store.upsert_edges(res1.edges)

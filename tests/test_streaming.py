@@ -147,6 +147,38 @@ def test_stream_to_store_merge_and_restart(spark, tmp_path):
     assert store.nodes().count() == len(nodes1)
 
 
+def test_stream_to_store_vacuums_superseded_commits(spark, tmp_path):
+    """A long-running stream must not keep a copy of the touched buckets
+    for every micro-batch: after each batch, each <table>._commits holds
+    only the commit dirs its manifest names. Batch 1 replays batch 0's
+    turns, so it supersedes every bucket batch 0 wrote."""
+    import json
+    import os
+
+    from knowledge_graph_builder_spark.sources.graph_store import GraphStore
+    from knowledge_graph_builder_spark.streaming.incremental import stream_kg_to_store
+
+    inp = str(tmp_path / "in")
+    store_root, ckpt = str(tmp_path / "store"), str(tmp_path / "ck")
+    golden_transcripts(spark).coalesce(1).write.parquet(inp)
+    stream_kg_to_store(spark, inp, store_root, ckpt).awaitTermination(180)
+    state0 = {(r.name, r.type) for r in GraphStore(spark, store_root).nodes().collect()}
+
+    # same checkpoint, new file: the restarted query delivers it as batch 1
+    golden_transcripts(spark).coalesce(1).write.mode("append").parquet(inp)
+    stream_kg_to_store(spark, inp, store_root, ckpt).awaitTermination(180)
+
+    for table in ("nodes", "edges"):
+        with open(f"{store_root}/{table}.manifest.json") as fh:
+            manifest = json.load(fh)
+        assert manifest["seq"] == 1  # both batches committed
+        live = set(manifest["buckets"].values())
+        assert set(os.listdir(f"{store_root}/{table}._commits")) == live
+    store = GraphStore(spark, store_root)
+    assert {(r.name, r.type) for r in store.nodes().collect()} == state0
+    assert store.nodes().count() == len(state0)
+
+
 def test_streaming_stats_equal_batch_aggregate(spark):
     # the sentinel-flush contract: the availableNow stream's APPEND-mode
     # output must equal the plain batch windowed aggregate (this is the
