@@ -180,8 +180,10 @@ def bpe_train(
     path exercised where it is cheap) and ``collect`` beyond — real
     tokenizer merge counts must never serialize O(merges) Spark jobs.
 
-    The collect is SIZE-GATED (same early-exit ``limit(k+1).count()``
-    probe as ``canonicalize.connected_components``): on a web corpus the
+    The collect is SIZE-GATED by an early-exit ``limit(k+1).count()``
+    probe (``canonicalize.connected_components`` gates at the same k+1
+    rows, but fetches them as Arrow, since there the fetch is the whole
+    union-find input): on a web corpus the
     distinct-word dictionary (typos, URLs, hex blobs) is 10^8-10^9 rows —
     a corpus-shaped driver collect with the default ``min_freq=1``. If
     the dictionary exceeds ``max_dict_words``, ``min_freq`` is doubled

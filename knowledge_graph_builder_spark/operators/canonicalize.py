@@ -17,9 +17,11 @@ Pipeline:
    sharing ONLY a hot token comes from the LSH bands instead.
 3. verification: Jaccard over token sets >= threshold.
 4. connected components over the verified pair graph — size-gated
-   physical strategy: a driver-side union-find when the pair set fits
-   the driver (probed with an early-exiting limit+count), else
-   alternating large-star / small-star DataFrame joins (Kiveris et al.,
+   physical strategy: ONE ``limit(k+1).toArrow()`` fetch; if it holds at
+   most k pairs, a driver-side union-find folds it one Arrow record batch
+   at a time (driver memory: k+1 pairs as Arrow plus O(nodes) union-find
+   state) and returns the components as an Arrow-backed local frame;
+   else alternating large-star / small-star DataFrame joins (Kiveris et al.,
    "Connected Components in MapReduce and Beyond", SoCC'14) with
    localCheckpoint per iteration to cut lineage.
 5. canonical_id = min member of each component.
@@ -37,48 +39,63 @@ N_MINHASH = 8
 LSH_BANDS = 4  # rows per band = N_MINHASH / LSH_BANDS
 
 
-def _canonical_name(col):
-    return F.lower(F.trim(col))
+def _canonical_sql(col: str) -> str:
+    return f"lower(trim({col}))"
+
+
+def _token_jaccard(a: str, b: str):
+    """Jaccard over the token sets of name columns ``a`` and ``b``.
+
+    NB: split leaves an empty token when the name ends in punctuation
+    ("x inc." -> ["x","inc",""]); removing it matters — the phantom ""
+    both inflates cross-name Jaccard (false merges) and deflates
+    bare-vs-suffixed Jaccard (missed merges)."""
+    ta, tb = (
+        f"array_remove(array_distinct(split({_canonical_sql(c)}, '[^a-z0-9]+')), '')"
+        for c in (a, b)
+    )
+    return F.expr(f"size(array_intersect({ta}, {tb})) / greatest(size(array_union({ta}, {tb})), 1)")
 
 
 def blocking_keys(names: DataFrame, name_col: str = "name") -> DataFrame:
-    """names -> (name, block_key). Token blocks + MinHash-LSH band blocks."""
+    """names -> (name, block_key). Token blocks + MinHash-LSH band blocks.
+
+    The key expressions are Spark SQL text: a Column-DSL ``transform``
+    lambda is built through one py4j call per expression node (about a
+    thousand for the eight MinHash transforms); SQL text is parsed in the
+    JVM, a few calls per projection."""
     base = names.select(F.col(name_col).alias("name")).distinct()
-    canon = _canonical_name(F.col("name"))
+    canon = _canonical_sql("name")
 
     # array_distinct before explode: keys must be unique per (name, key)
     # so downstream block-size counts need no extra distinct shuffle
-    tokens = base.select(
-        "name", F.explode(F.array_distinct(F.split(canon, r"[^a-z0-9]+"))).alias("tok")
-    ).filter(F.length("tok") >= 2).select(
-        "name", F.concat(F.lit("tok:"), F.col("tok")).alias("block_key")
+    tokens = (
+        base.selectExpr("name", f"explode(array_distinct(split({canon}, '[^a-z0-9]+'))) AS tok")
+        .filter("length(tok) >= 2")
+        .selectExpr("name", "concat('tok:', tok) AS block_key")
     )
 
     # char 3-gram shingles via sequence+substring (no UDF)
-    padded = F.concat(F.lit("^"), canon, F.lit("$"))
-    shingled = base.select(
+    padded = f"concat('^', {canon}, '$')"
+    shingled = base.selectExpr(
         "name",
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1))),
-            lambda i: padded.substr(i, F.lit(3)),
-        ).alias("shingles"),
+        f"transform(sequence(1, greatest(length({padded}) - 2, 1)), i -> substr({padded}, i, 3)) AS shingles",
     )
-    # minhash: for each of k seeds, min over shingles of xxhash64(shingle, seed)
-    sig_cols = [
-        F.array_min(
-            F.transform("shingles", lambda s: F.xxhash64(s, F.lit(seed)))
-        ).alias(f"h{seed}")
-        for seed in range(N_MINHASH)
-    ]
-    sigs = shingled.select("name", *sig_cols)
+    # minhash: for each of k seeds, min over shingles of xxhash64(shingle,
+    # seed). The seed is an INT literal: xxhash64 hashes int and bigint
+    # differently, so a bigint seed would change every key.
+    sigs = shingled.selectExpr(
+        "name",
+        *[f"array_min(transform(shingles, s -> xxhash64(s, {seed}))) AS h{seed}" for seed in range(N_MINHASH)],
+    )
     rows_per_band = N_MINHASH // LSH_BANDS
-    band_keys = []
-    for b in range(LSH_BANDS):
-        parts = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_keys.append(
-            F.concat_ws(":", F.lit(f"lsh{b}"), *[p.cast("string") for p in parts]).alias(f"bk{b}")
-        )
-    lsh = sigs.select("name", F.explode(F.array(*band_keys)).alias("block_key"))
+    band_keys = ", ".join(
+        f"concat_ws(':', 'lsh{b}', "
+        + ", ".join(f"cast(h{b * rows_per_band + r} AS string)" for r in range(rows_per_band))
+        + ")"
+        for b in range(LSH_BANDS)
+    )
+    lsh = sigs.selectExpr("name", f"explode(array({band_keys})) AS block_key")
 
     return tokens.unionByName(lsh)
 
@@ -103,15 +120,6 @@ def candidate_pairs(
     )
     bounded = keys.join(ok_blocks, "block_key")
 
-    # NB: split leaves an empty token when the name ends in punctuation
-    # ("x inc." -> ["x","inc",""]); removing it matters — the phantom ""
-    # both inflates cross-name Jaccard (false merges) and deflates
-    # bare-vs-suffixed Jaccard (missed merges).
-    tok = lambda c: F.array_remove(F.array_distinct(F.split(_canonical_name(c), r"[^a-z0-9]+")), "")
-    a_t, b_t = tok(F.col("a")), tok(F.col("b"))
-    inter = F.size(F.array_intersect(a_t, b_t))
-    union = F.size(F.array_union(a_t, b_t))
-    jac = inter / F.greatest(union, F.lit(1))
     pairs = (
         bounded.select("block_key", F.col("name").alias("a"))
         .join(bounded.select("block_key", F.col("name").alias("b")), "block_key")
@@ -120,7 +128,7 @@ def candidate_pairs(
         # math evaluated per block-collision, and it shrinks the distinct's
         # shuffle (a pair surviving k shared blocks shuffles k rows either
         # way, but rejected pairs never reach the exchange at all)
-        .filter(jac >= jaccard_threshold)
+        .filter(_token_jaccard("a", "b") >= jaccard_threshold)
         .select("a", "b")
         .distinct()
         # eager checkpoint so the keys cache can be released here rather
@@ -133,12 +141,20 @@ def candidate_pairs(
     return pairs
 
 
-def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find over a collected pair list — the small-graph
-    physical strategy of ``connected_components``. Path-compressed,
-    union-by-size; the component label is the MINIMUM member, identical to
-    the distributed loop (parity pinned by test)."""
-    spark = edges.sparkSession
+def _cc_driver(spark, pairs) -> DataFrame:
+    """Driver-side union-find over the fetched (a, b) pair table — the
+    small-graph physical strategy of ``connected_components``.
+    Path-compressed, union-by-size; the component label is the MINIMUM
+    member, identical to the distributed loop (parity pinned by test).
+
+    ``pairs`` is a ``pyarrow.Table``, folded one record batch at a time:
+    the driver holds the Arrow pairs, the O(nodes) union-find state and
+    the Python values of ONE batch, never a Row per pair. The sorted
+    (name, component) rows go back as an Arrow table typed like the
+    fetched ids, which Spark plans as a ``LocalTableScan`` — no Python
+    RDD, no Python-worker task."""
+    import pyarrow as pa
+
     parent: dict = {}
 
     def find(x):
@@ -149,41 +165,41 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # stream the pairs instead of collect(): toLocalIterator holds one
-    # partition of Row objects at a time and each Row is unpacked and
-    # dropped immediately, so driver residency is O(nodes) interned
-    # strings (the union-find state), not O(edges) Row objects
-    # (round-4 advice: 1M collected Rows is hundreds of driver MB).
     size: dict = {}
     nodes: set = set()
-    for ea, eb in edges.select("a", "b").toLocalIterator():
-        nodes.add(ea)
-        nodes.add(eb)
-        a, b = find(ea), find(eb)
-        if a == b:
-            continue
-        if size.get(a, 1) < size.get(b, 1):
-            a, b = b, a
-        parent[b] = a
-        size[a] = size.get(a, 1) + size.get(b, 1)
+    for batch in pairs.to_batches():
+        for ea, eb in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            nodes.add(ea)
+            nodes.add(eb)
+            a, b = find(ea), find(eb)
+            if a == b:
+                continue
+            if size.get(a, 1) < size.get(b, 1):
+                a, b = b, a
+            parent[b] = a
+            size[a] = size.get(a, 1) + size.get(b, 1)
     members: dict = {}
     for n in nodes:
         members.setdefault(find(n), []).append(n)
     out = sorted((n, min(ms)) for ms in members.values() for n in ms)
-    dtype = edges.schema["a"].dataType
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType([StructField("name", dtype), StructField("component", dtype)])
-    return spark.createDataFrame(out, schema)
+    dtype = pairs.schema.field(0).type
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "name": pa.array([n for n, _ in out], dtype),
+                "component": pa.array([c for _, c in out], dtype),
+            }
+        )
+    )
 
 
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    # 200k pairs ≈ tens of MB of driver union-find state with streamed
-    # ingestion (round-4 advice: the old 1M default meant up to 1M
-    # collected Rows — hundreds of MB of per-Row overhead on a default
-    # driver heap)
+    # 200k pairs ≈ tens of MB of driver state: the fetched Arrow pairs
+    # plus the union-find dicts (round-4 advice: the old 1M default meant
+    # up to 1M collected Rows — hundreds of MB of per-Row overhead on a
+    # default driver heap)
     small_graph_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(a, b) -> (name, component) via alternating large-star /
@@ -191,21 +207,25 @@ def connected_components(
     lexicographically smallest member.
 
     Physical strategy is size-gated, the same engine-picks-the-plan
-    pattern as ``bpe_train``/``bpe_apply``: a ``limit(k+1).count()`` probe
-    (early-exiting — it never scans more than k+1 rows of a huge pair set)
-    decides whether the pair graph fits the driver. At or below the
-    threshold, a driver-side union-find resolves components in one pass —
-    the iterative loop's per-round fixed cost (multiple exchanges + a
-    convergence-signature job) dwarfs the data cost there. Above it, the
+    pattern as ``bpe_train``/``bpe_apply``: ONE fetch,
+    ``edges.select("a", "b").limit(k + 1).toArrow()``, both decides and
+    serves. If it returns at most k rows it is the whole pair set, and a
+    driver-side union-find resolves components from it in one pass — the
+    iterative loop's per-round fixed cost (multiple exchanges + a
+    convergence-signature job) dwarfs the data cost there. Driver memory
+    is bounded by the threshold: at most k+1 pairs held as Arrow plus
+    O(nodes) union-find state, converted to Python one record batch at a
+    time. If it returns k+1 rows, the fetch is dropped and the
     distributed large-star/small-star loop runs, whose per-round cost
     scales with the data and whose round count is O(log n) — the only
     path that exists at web scale. Both produce byte-identical output
     (pinned by test); pass ``small_graph_threshold=0`` to force the
     distributed loop."""
-    if small_graph_threshold and (
-        edges.limit(small_graph_threshold + 1).count() <= small_graph_threshold
-    ):
-        return _cc_driver(edges)
+    if small_graph_threshold:
+        pairs = edges.select("a", "b").limit(small_graph_threshold + 1).toArrow()
+        if pairs.num_rows <= small_graph_threshold:
+            return _cc_driver(edges.sparkSession, pairs)
+        del pairs
 
     # canonical undirected representation: (u, v) with v < u ("points at
     # the smaller endpoint"); self-loops dropped. Round-3 shipped a
@@ -385,17 +405,12 @@ def canonicalize_incremental(
     )
     bounded = keys_in_play.join(ok_blocks, "block_key")
     new_bounded = keys_new.join(ok_blocks, "block_key")
-    tok = lambda c: F.array_remove(F.array_distinct(F.split(_canonical_name(c), r"[^a-z0-9]+")), "")
-    a_t, b_t = tok(F.col("a")), tok(F.col("b"))
-    jac = F.size(F.array_intersect(a_t, b_t)) / F.greatest(
-        F.size(F.array_union(a_t, b_t)), F.lit(1)
-    )
     pairs = (
         bounded.select("block_key", F.col("name").alias("x"))
         .join(new_bounded.select("block_key", F.col("name").alias("y")), "block_key")
         .filter(F.col("x") != F.col("y"))
         .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-        .filter(jac >= jaccard_threshold)
+        .filter(_token_jaccard("a", "b") >= jaccard_threshold)
         .distinct()
         .localCheckpoint()
     )

@@ -250,3 +250,148 @@ def test_canonicalize_incremental_random_property(spark):
         canonicalize_nodes(b1.unionByName(b2), max_block=500).select("name", "canonical_id")
     )
     assert inc == full
+
+
+# -- the Column-DSL formulation of blocking keys and pair verification,
+# kept as the oracle of the SQL-text expressions the operator now builds
+def _dsl_blocking_keys(names, name_col="name"):
+    from knowledge_graph_builder_spark.operators.canonicalize import LSH_BANDS, N_MINHASH
+
+    base = names.select(F.col(name_col).alias("name")).distinct()
+    canon = F.lower(F.trim(F.col("name")))
+    tokens = base.select(
+        "name", F.explode(F.array_distinct(F.split(canon, r"[^a-z0-9]+"))).alias("tok")
+    ).filter(F.length("tok") >= 2).select(
+        "name", F.concat(F.lit("tok:"), F.col("tok")).alias("block_key")
+    )
+    padded = F.concat(F.lit("^"), canon, F.lit("$"))
+    shingled = base.select(
+        "name",
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1))),
+            lambda i: padded.substr(i, F.lit(3)),
+        ).alias("shingles"),
+    )
+    sig_cols = [
+        F.array_min(F.transform("shingles", lambda s: F.xxhash64(s, F.lit(seed)))).alias(f"h{seed}")
+        for seed in range(N_MINHASH)
+    ]
+    sigs = shingled.select("name", *sig_cols)
+    rows_per_band = N_MINHASH // LSH_BANDS
+    band_keys = []
+    for b in range(LSH_BANDS):
+        parts = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+        band_keys.append(
+            F.concat_ws(":", F.lit(f"lsh{b}"), *[p.cast("string") for p in parts]).alias(f"bk{b}")
+        )
+    lsh = sigs.select("name", F.explode(F.array(*band_keys)).alias("block_key"))
+    return tokens.unionByName(lsh)
+
+
+def _dsl_candidate_pairs(names, max_block=50, jaccard_threshold=0.5):
+    keys = _dsl_blocking_keys(names)
+    ok_blocks = (
+        keys.groupBy("block_key")
+        .agg(F.count("*").alias("n"))
+        .filter((F.col("n") >= 2) & (F.col("n") <= max_block))
+        .select("block_key")
+    )
+    bounded = keys.join(ok_blocks, "block_key")
+    tok = lambda c: F.array_remove(F.array_distinct(F.split(F.lower(F.trim(c)), r"[^a-z0-9]+")), "")
+    a_t, b_t = tok(F.col("a")), tok(F.col("b"))
+    jac = F.size(F.array_intersect(a_t, b_t)) / F.greatest(F.size(F.array_union(a_t, b_t)), F.lit(1))
+    return (
+        bounded.select("block_key", F.col("name").alias("a"))
+        .join(bounded.select("block_key", F.col("name").alias("b")), "block_key")
+        .filter(F.col("a") < F.col("b"))
+        .filter(jac >= jaccard_threshold)
+        .select("a", "b")
+        .distinct()
+    )
+
+
+def _alias_names_frame(spark):
+    """~2k generated alias names (base x suffix variants) plus the edge
+    cases of the key expressions, as an Arrow-backed frame."""
+    import random
+
+    import pyarrow as pa
+
+    rng = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyzéøß"
+    bases = {
+        " ".join(
+            "".join(rng.choice(letters) for _ in range(rng.randint(2, 9)))
+            for _ in range(rng.randint(1, 3))
+        ).title()
+        for _ in range(260)
+    }
+    suffixes = ["", " Inc", " Inc.", " Corp", ", LLC", " Group", " & Co", " Holdings"]
+    names = [b + s for b in sorted(bases) for s in suffixes]
+    names += [
+        "", " ", "   ", "\t\n", "a", "Z", "x inc.", "acme!!", "acme.", "ACME",
+        "Zoë Ćorp", "日本語 株式会社", "Ünïcödé Name", "a" * 300, ("ab " * 100).strip(), None,
+    ]
+    return spark.createDataFrame(pa.table({"name": pa.array(names, pa.string())}))
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.fillna("<null>").collect())
+
+
+def test_blocking_keys_and_pairs_match_column_dsl(spark):
+    """The SQL-text key and Jaccard expressions must produce exactly the
+    keys and verified pairs of the Column-DSL formulation they replaced —
+    on generated aliases and on empty, whitespace-only, one-char,
+    trailing-punctuation, non-ASCII, 300-char and NULL names. xxhash64
+    hashes an int and a bigint seed differently, so a seed literal of
+    another type changes every LSH key and fails here."""
+    from knowledge_graph_builder_spark.operators.canonicalize import (
+        blocking_keys,
+        candidate_pairs,
+    )
+
+    names = _alias_names_frame(spark).cache()
+    try:
+        keys = _sorted_rows(blocking_keys(names))
+        assert keys == _sorted_rows(_dsl_blocking_keys(names))
+        assert sum(k.startswith("lsh") for _, k in keys) > 8_000
+        pairs = _sorted_rows(candidate_pairs(names))
+        assert pairs == _sorted_rows(_dsl_candidate_pairs(names))
+        assert len(pairs) > 1_000
+        low = _sorted_rows(candidate_pairs(names, max_block=500, jaccard_threshold=0.2))
+        assert low == _sorted_rows(_dsl_candidate_pairs(names, 500, 0.2))
+    finally:
+        names.unpersist()
+
+
+def test_small_graph_components_one_job_no_python_rdd(spark):
+    """The small-graph CC path is ONE Spark job (the limit(k+1).toArrow()
+    fetch) and returns its components as a LocalTableScan — no Python
+    RDD, so no Python-worker task when the result is read."""
+    import pyarrow as pa
+
+    edges = spark.createDataFrame(
+        pa.table({"a": ["a", "b", "d", "x"], "b": ["b", "c", "e", "x"]})
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-small-graph", "job count")
+    try:
+        comp = connected_components(edges)
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-small-graph")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) == 1, f"expected one fetch job, saw {len(jobs)}"
+    plan = comp._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert {(r["name"], r["component"]) for r in comp.collect()} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("x", "x")
+    }
+
+    nodes = spark.createDataFrame(pa.table({"name": ["Apple", "Apple Inc", "Tim Cook"]}))
+    canon = canonicalize_nodes(nodes)
+    plan = canon._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert {r["name"]: r["canonical_id"] for r in canon.collect()} == {
+        "Apple": "Apple", "Apple Inc": "Apple", "Tim Cook": "Tim Cook"
+    }

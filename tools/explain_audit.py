@@ -37,6 +37,7 @@ def main(sf_dir: str) -> int:
     import __spark_entry__ as entry
     from knowledge_graph_builder_spark.session import get_spark
     from knowledge_graph_builder_spark.operators.extraction import EMIT_GRAPH, extract_from_transcripts
+    from knowledge_graph_builder_spark.plans.pipeline import run_pipeline
     from knowledge_graph_builder_spark.sources.synth import golden_transcripts
 
     spark = get_spark(master="local[4]", shuffle_partitions=8)
@@ -196,6 +197,13 @@ def main(sf_dir: str) -> int:
     pci = plan_of(entry.queries()["canonicalize_incr"](spark, sf_dir))
     check("incremental canonicalize has no cartesian product",
           "CartesianProduct" not in pci, pci[:400])
+    # the small-graph CC path hands its components back as an Arrow-backed
+    # local relation (here empty, so the optimizer drops the join): no
+    # Python-RDD scan, the only ExistingRDD is the transcripts' own input
+    pcn = plan_of(entry.queries()["canonicalize"](spark, sf_dir))
+    pin = plan_of(run_pipeline(spark, golden_transcripts(spark), persist=False).nodes)
+    check("canonicalize components come back without a Python RDD",
+          pcn.count("ExistingRDD") == pin.count("ExistingRDD"), pcn[-600:])
 
     spark.stop()
     print(f"\n{len(failures)} failures")
