@@ -8,7 +8,7 @@ parquet/Iceberg tables of multi-turn conversation transcripts:
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)
         -> conversation assembly (stable turn ordering)
-        -> one-pass vectorized extraction kernel (Arrow / mapInPandas)
+        -> one-pass vectorized extraction kernel (Arrow / mapInArrow)
         -> relational relationship rules + semantic validation
         -> event extraction
         -> graph materialization (nodes / edges / events tables)

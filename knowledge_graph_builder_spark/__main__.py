@@ -1,21 +1,29 @@
-"""spark-submit entry point.
+"""The engine's CLI. spark-submit needs a .py file, so it runs this
+through tools/submit_job.py:
 
-    spark-submit --py-files kgb.zip -m knowledge_graph_builder_spark \
+    python tools/make_pyfiles.py
+    spark-submit --py-files dist/knowledge_graph_builder_spark.zip \
+        tools/submit_job.py \
         --input  /data/transcripts \
         --output /data/kg \
         --checkpoint /data/kg/_checkpoints \
         --session-id batch-2026-08-16 \
         --partitions 4096
 
+Without spark-submit: ``python -m knowledge_graph_builder_spark ...``.
+
 Reads the transcripts table (Iceberg identifier via --table, else parquet
 path via --input), runs the fused single-shuffle pipeline, and writes the
-nodes/edges/triples/events tables partitioned for downstream MERGE.
+nodes/edges/triples/events tables partitioned for downstream MERGE. A
+batch run prints ONE JSON line to stdout: run_id, master, wall_sec, the
+row count of each written table (read back) and the stage lineage.
 """
 
 from __future__ import annotations
 
 import argparse
-import sys
+import json
+import time
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -62,6 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     from .plans.pipeline import run_pipeline
     from .sources.transcripts import read_transcripts
 
+    t0 = time.monotonic()
     transcripts = read_transcripts(spark, args.table or args.input, fmt=args.format)
     res = run_pipeline(
         spark,
@@ -71,12 +80,18 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         kernel_partitions=args.partitions,
     )
-    res.nodes.write.mode("overwrite").parquet(f"{args.output}/nodes")
-    res.edges.write.mode("overwrite").parquet(f"{args.output}/edges")
-    res.triples.write.mode("overwrite").parquet(f"{args.output}/triples")
-    res.events.write.mode("overwrite").parquet(f"{args.output}/events")
-    for row in res.lineage:
-        print(row, file=sys.stderr)
+    counts = {}
+    for name in ("nodes", "edges", "triples", "events"):
+        path = f"{args.output.rstrip('/')}/{name}"
+        getattr(res, name).write.mode("overwrite").parquet(path)
+        counts[name] = spark.read.parquet(path).count()
+    print(json.dumps({
+        "run_id": args.run_id,
+        "master": spark.sparkContext.master,
+        "wall_sec": round(time.monotonic() - t0, 3),
+        "counts": counts,
+        "lineage": res.lineage,
+    }))
     return 0
 
 

@@ -19,7 +19,7 @@ Scale notes (10^12 turns):
   (``run_pipeline(precap=True)``).
 * For the fused scale path that avoids materializing documents at all,
   see operators/extraction.py::extract_from_transcripts (repartition +
-  sortWithinPartitions + one mapInPandas pass).
+  sortWithinPartitions + one mapInArrow pass).
 """
 
 from __future__ import annotations

@@ -3,20 +3,20 @@
 
 The reference parsed every document with spaCy FOUR times per request
 (entity stage, strategy-1, SVO, event stage — SURVEY.md §3.1). Here the
-document is parsed ONCE inside an Arrow-batched ``mapInPandas`` kernel
+document is parsed ONCE inside an Arrow-batched ``mapInArrow`` kernel
 that emits sentence-indexed mention and SVO rows; everything downstream
 is relational and shares this single parse, which also guarantees the
 sentence-string-equality joins (metadata R9, events EV2) are exact.
 
-Two entry points:
+Two entry points share one kernel (``_make_fused_kernel``):
 * ``extract_kernel(documents)`` — kernel over assembled documents.
 * ``extract_from_transcripts(transcripts)`` — the fused scale path:
   one shuffle (repartition by conv_id) + sortWithinPartitions + a single
-  streaming mapInPandas that assembles each conversation from its ordered
+  streaming mapInArrow that assembles each conversation from its ordered
   turns and parses it without ever materializing a documents table. At
   10^12 turns this halves the shuffled bytes vs assemble-then-extract.
 
-Per-row Python is never used; the kernel sees pandas batches via Arrow.
+Per-row Python is never used; the kernel reads and writes Arrow batches.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from __future__ import annotations
 import warnings
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -48,21 +47,10 @@ _KERNEL_COLS = [f.name for f in KERNEL_ROWS.fields]
 
 
 def _pa_schema():
-    """PyArrow schema mirroring KERNEL_ROWS (for mapInArrow emission)."""
-    import pyarrow as pa
+    """KERNEL_ROWS as a PyArrow schema (for mapInArrow emission)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    s = pa.string()
-    i = pa.int32()
-    fields = [
-        ("conv_id", s), ("sent_idx", i), ("sentence", s), ("kind", s),
-        ("text", s), ("label", s), ("ctype", s), ("norm_text", s),
-        ("obj", s), ("svo_ord", i), ("start_char", i), ("end_char", i),
-        ("conf", pa.float64()), ("reason", s), ("verb", s),
-        ("pri", i), ("orda", i), ("ordb", i), ("attach", pa.bool_()),
-        ("forced", pa.bool_()), ("mdate", s), ("mamount", s),
-        ("location", s), ("parts", pa.list_(s)),
-    ]
-    return pa.schema(fields)
+    return to_arrow_schema(KERNEL_ROWS)
 
 
 def _rows_to_batch(rows: list[tuple]):
@@ -143,17 +131,6 @@ def _rows_for_document(conv_id: str, text: str, emit: frozenset = EMIT_ALL) -> I
                    None, ev.date, ev.amount, ev.location, ev.participants)
 
 
-def _make_kernel(emit: frozenset):
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for conv_id, text in zip(pdf["conv_id"], pdf["doc_text"]):
-                rows.extend(_rows_for_document(conv_id, text, emit))
-            yield pd.DataFrame(rows, columns=_KERNEL_COLS)
-
-    return _kernel
-
-
 def extract_kernel(
     documents: DataFrame, parallelism: int | None = None, emit: frozenset = EMIT_ALL
 ) -> DataFrame:
@@ -162,12 +139,15 @@ def extract_kernel(
     ``repartition`` before the kernel spreads documents evenly across
     executors regardless of upstream partitioning (conversation sizes are
     skewed; round-robin on rows is the cheapest skew fix since each row is
-    one whole document).
+    one whole document). Each document row is a run of one row for the
+    shared kernel, whose assembly then leaves its text unchanged
+    (``assemble_conversations`` emits one row per conv_id, already capped
+    at MAX_TEXT_LENGTH).
     """
     docs = documents.select("conv_id", "doc_text")
     if parallelism:
         docs = docs.repartition(parallelism)
-    return docs.mapInPandas(_make_kernel(emit), schema=KERNEL_ROWS)
+    return docs.mapInArrow(_make_fused_kernel(emit), schema=KERNEL_ROWS)
 
 
 _EMIT_EVERY = 50_000  # kernel rows buffered before an Arrow batch is emitted
@@ -178,9 +158,9 @@ def _make_fused_kernel(emit: frozenset):
         """Streaming group-by over (conv_id)-clustered, turn-ordered Arrow
         batches (mapInArrow — no pandas on either side of the kernel).
 
-        Rows arrive sorted by (conv_id, turn_idx) within the partition, so
-        a conversation is a run of consecutive rows; runs can span Arrow
-        batch boundaries, hence the carry buffer. Output rows accumulate
+        Rows arrive sorted by (conv_id, turn_idx, text) within the
+        partition, so a conversation is a run of consecutive rows; runs can
+        span Arrow batch boundaries, hence the carry buffer. Output rows accumulate
         in one flat tuple buffer and are emitted as large columnar
         RecordBatches.
         """
@@ -272,7 +252,8 @@ def extract_from_transcripts(
                 stacklevel=2,
             )
             conf.set(flag, "false")
-    t = t.sortWithinPartitions("conv_id", "turn_idx")
+    # text breaks turn_idx ties, as in assemble_conversations
+    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
     t = t.select("conv_id", "text")  # column order contract with the kernel
     return t.mapInArrow(_make_fused_kernel(emit), schema=KERNEL_ROWS)
 

@@ -3,7 +3,8 @@ assumes: AQE (with skew-join splitting), Arrow transfer for the extraction
 kernel, and shuffle partitions sized to the local core count.
 
 On a real cluster the same settings apply; only master/memory change
-(driven by spark-submit). Nothing here is local-mode-specific logic.
+(driven by spark-submit, whose settings win over these defaults).
+Nothing here is local-mode-specific logic.
 """
 
 from __future__ import annotations
@@ -13,44 +14,58 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _launcher_conf() -> set[str]:
+    """Keys a launcher (spark-submit, the pyspark shell) already set in
+    the JVM this process joined; empty when pyspark starts its own JVM."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:  # pyspark/java_gateway.py
+        return set()
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return {k for k, _ in SparkConf().getAll()}
+
+
 def get_spark(
     app_name: str = "knowledge_graph_builder_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    defaults = {
+        "spark.master": os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus or '*'}]",
+        "spark.sql.shuffle.partitions": cpus if cpus and cpus.isdigit() else "32",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+    # under spark-submit the launcher's master and conf win over these
+    # defaults; explicit arguments still win over both
+    preset = _launcher_conf()
+    conf = {k: v for k, v in defaults.items() if k not in preset}
+    # The zero-shuffle pipeline (extract_from_transcripts
+    # assume_clustered=True) depends on Spark honoring the bucketed
+    # layout of the transcripts table. Spark 4.x's
+    # DisableUnnecessaryBucketedScan rule demotes a bucketed scan when
+    # no downstream operator *requires* the distribution — which is
+    # exactly our case, because the kernel consumes co-location as a
+    # data-layout precondition invisible to the planner. A demoted scan
+    # re-splits files by size and silently breaks conversation
+    # co-location at production file sizes, so the optimization must
+    # stay off for every session that reads bucketed transcripts.
+    conf["spark.sql.sources.bucketing.autoBucketedScan.enabled"] = "false"
+    if master:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # The zero-shuffle pipeline (extract_from_transcripts
-        # assume_clustered=True) depends on Spark honoring the bucketed
-        # layout of the transcripts table. Spark 4.x's
-        # DisableUnnecessaryBucketedScan rule demotes a bucketed scan when
-        # no downstream operator *requires* the distribution — which is
-        # exactly our case, because the kernel consumes co-location as a
-        # data-layout precondition invisible to the planner. A demoted scan
-        # re-splits files by size and silently breaks conversation
-        # co-location at production file sizes, so the optimization must
-        # stay off for every session that reads bucketed transcripts.
-        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = SparkSession.builder.appName(app_name).config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

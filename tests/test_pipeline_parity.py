@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from knowledge_graph_builder_spark.plans.pipeline import run_pipeline
+from knowledge_graph_builder_spark.schema import TRANSCRIPTS
 from knowledge_graph_builder_spark.sources.synth import golden_transcripts, synth_transcripts
 
 
@@ -73,6 +74,18 @@ def test_pipeline_parity_golden(spark):
 
 def test_pipeline_parity_synth(spark):
     _assert_equal(spark, synth_transcripts(spark, n_convs=40, seed=11))
+
+
+# two turns of one conversation share turn_idx 0: both paths must join
+# them in text order ("Apple ..." first), whatever the input row order
+TIED_TURNS = ("Tim Cook is the CEO of Apple.", "Apple was founded in 1976 by Steve Jobs.")
+
+
+@pytest.mark.parametrize("order", ["ab", "ba"])
+def test_pipeline_parity_tied_turn_idx(spark, order):
+    texts = TIED_TURNS if order == "ab" else TIED_TURNS[::-1]
+    rows = [("tied", 0, "user", text, "", None) for text in texts]
+    _assert_equal(spark, spark.createDataFrame(rows, schema=TRANSCRIPTS))
 
 
 INPUTS = {

@@ -76,6 +76,7 @@ def test_spark_submit_golden_pipeline(tmp_path, spark):
     metrics_lines = [l for l in proc.stdout.splitlines() if l.startswith('{"run_id"')]
     assert metrics_lines, proc.stdout[-2000:]
     metrics = json.loads(metrics_lines[-1])
+    assert metrics["master"] == "local[4]"  # spark-submit's master, not get_spark's default
     assert metrics["counts"]["triples"] == len(GOLDEN_EXPECTED_TRIPLES)
 
     got = {

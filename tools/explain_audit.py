@@ -71,7 +71,11 @@ def main(sf_dir: str) -> int:
     pk = plan_of(kr)
     n_ex = pk.count("Exchange ")
     check("fused kernel has exactly one exchange", n_ex == 1, f"found {n_ex}")
-    check("fused kernel is Arrow-evaluated", "MapInArrow" in pk or "ArrowEvalPython" in pk or "MapInPandas" in pk)
+    check("fused kernel is Arrow-evaluated", "MapInArrow" in pk, pk[:400])
+    # the relational path runs the same Arrow kernel over assembled documents
+    prk = plan_of(run_pipeline(spark, golden_transcripts(spark), fused=False, persist=False).kernel_rows)
+    check("relational kernel is the same Arrow kernel (no pandas emission)",
+          "MapInArrow" in prk and "MapInPandas" not in prk, prk[:400])
 
     # 4) round-2 additions
     p10 = plan_of(entry.queries()["tpch_q10_top20"](spark, sf_dir))

@@ -1,99 +1,17 @@
-"""spark-submit entry point for the KG construction pipeline (north_rule:
-"driven by spark-submit --py-files on a multi-executor cluster").
+"""spark-submit primary resource for the engine's CLI
+(knowledge_graph_builder_spark/__main__.py has the flags and output):
 
     python tools/make_pyfiles.py
     spark-submit --master <cluster-url> \
         --py-files dist/knowledge_graph_builder_spark.zip \
-        tools/submit_job.py \
-        --input  /data/transcripts            # parquet dir or Iceberg table \
-        --output /data/kg_out                 # nodes/edges/triples/events land here \
-        --checkpoint-dir /data/kg_ckpt --run-id nightly-42
+        tools/submit_job.py --input /data/transcripts --output /data/kg
 
-This file deliberately imports the engine ONLY from the shipped zip (no
-repo-relative sys.path edits): a successful run proves the --py-files
-artifact is self-contained, exactly as it must be on a real cluster where
-executors have no checkout.
-
-Input is the north-rule transcript shape (conv_id string, turn_idx int,
-role string, text string, tool string, ts timestamp). `--format iceberg`
-reads a catalog table name instead of a path (requires the Iceberg runtime
-jar on the cluster classpath — not bundled here); default is parquet.
-With no --input, a tiny built-in golden corpus runs as a smoke test.
-
-Prints ONE JSON line of run metrics (counts, wall, per-stage lineage).
+It imports the engine ONLY from the shipped zip (no repo-relative
+sys.path edits): a successful run proves the --py-files artifact is
+self-contained, as it must be on a cluster whose executors have no checkout.
 """
 
-from __future__ import annotations
-
-import argparse
-import json
-import time
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", default=None, help="transcripts parquet path or Iceberg table name")
-    ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    ap.add_argument("--output", required=True, help="output directory for graph tables")
-    ap.add_argument("--session-id", default="batch")
-    ap.add_argument("--checkpoint-dir", default=None)
-    ap.add_argument("--run-id", default="run-0")
-    ap.add_argument("--kernel-partitions", type=int, default=None)
-    args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
-
-    # master/memory/executors come from spark-submit; only job-level SQL
-    # conf is set here so the same file runs on local[] and on a cluster.
-    spark = (
-        SparkSession.builder.appName(f"kgb-submit-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
-    from knowledge_graph_builder_spark.plans.pipeline import run_pipeline
-
-    if args.input is None:
-        from knowledge_graph_builder_spark.sources.synth import golden_transcripts
-
-        transcripts = golden_transcripts(spark)
-    elif args.format == "iceberg":
-        transcripts = spark.read.format("iceberg").load(args.input)
-    else:
-        transcripts = spark.read.parquet(args.input)
-
-    t0 = time.monotonic()
-    res = run_pipeline(
-        spark,
-        transcripts,
-        session_id=args.session_id,
-        checkpoint_dir=args.checkpoint_dir,
-        run_id=args.run_id,
-        kernel_partitions=args.kernel_partitions,
-        persist=args.checkpoint_dir is None,
-    )
-    counts = {}
-    for name in ("triples", "entities", "events", "nodes", "edges"):
-        df = getattr(res, name)
-        df.write.mode("overwrite").parquet(f"{args.output.rstrip('/')}/{name}")
-        counts[name] = spark.read.parquet(f"{args.output.rstrip('/')}/{name}").count()
-
-    print(
-        json.dumps(
-            {
-                "run_id": args.run_id,
-                "wall_sec": round(time.monotonic() - t0, 3),
-                "counts": counts,
-                "lineage": res.lineage,
-            }
-        )
-    )
-    spark.stop()
-
+from knowledge_graph_builder_spark.__main__ import main
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
