@@ -223,11 +223,11 @@ def extract_from_transcripts(
     # malformed-row contract (shared with assemble_conversations): a NULL
     # conv_id has no document to belong to -> dropped; a NULL turn_idx
     # sorts first deterministically as -1
-    t = transcripts.select(
-        "conv_id", "text", F.coalesce("turn_idx", F.lit(-1)).alias("turn_idx")
-    ).filter(F.col("conv_id").isNotNull())
+    t = transcripts.selectExpr(
+        "conv_id", "text", "coalesce(turn_idx, -1) AS turn_idx"
+    ).filter("conv_id IS NOT NULL")
     if not assume_clustered:
-        t = t.repartition(partitions, "conv_id") if partitions else t.repartition("conv_id")
+        t = t.repartition(partitions, t["conv_id"]) if partitions else t.repartition(t["conv_id"])
     else:
         # assume_clustered consumes bucket co-location as a DATA-LAYOUT
         # precondition the planner cannot see, so Spark 4's
@@ -252,57 +252,40 @@ def extract_from_transcripts(
                 stacklevel=2,
             )
             conf.set(flag, "false")
-    # text breaks turn_idx ties, as in assemble_conversations
-    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
-    t = t.select("conv_id", "text")  # column order contract with the kernel
+    # text breaks turn_idx ties, as in assemble_conversations; t[name] is
+    # one py4j call where a bare name costs a dozen
+    t = t.sortWithinPartitions(t["conv_id"], t["turn_idx"], t["text"])
+    t = t.selectExpr("conv_id", "text")  # column order contract with the kernel
     return t.mapInArrow(_make_fused_kernel(emit), schema=KERNEL_ROWS)
 
 
 # ---------------------------------------------------------------------------
 # Projections of the kernel's FINAL per-document rows onto the public
-# table schemas (fast path: zero joins, zero windows downstream).
+# table schemas (fast path: zero joins, zero windows downstream), as SQL
+# text: a few py4j calls per operator instead of several per Column.
 # ---------------------------------------------------------------------------
 
 
 def entities_from_kernel(kernel_rows: DataFrame) -> DataFrame:
-    return kernel_rows.filter(F.col("kind") == "entity").select(
-        "conv_id",
-        "text",
-        F.col("label").alias("type"),
-        "start_char",
-        "end_char",
-        F.col("reason").alias("context"),
-        F.col("sentence").alias("source_sentence"),
-        F.col("forced").alias("is_forced"),
+    return kernel_rows.filter("kind = 'entity'").selectExpr(
+        "conv_id", "text", "label AS type", "start_char", "end_char", "reason AS context",
+        "sentence AS source_sentence", "forced AS is_forced",
     )
 
 
 def triples_from_kernel(kernel_rows: DataFrame) -> DataFrame:
-    return kernel_rows.filter(F.col("kind") == "triple").select(
-        F.col("conv_id").alias("document_id"),
-        F.col("text").alias("source"),
-        F.col("obj").alias("target"),
-        F.col("label").alias("type"),
-        "reason",
-        F.col("conf").alias("confidence"),
-        "verb",
-        F.col("sentence").alias("source_sentence"),
-        F.col("mdate").alias("date"),
-        F.col("mamount").alias("amount"),
+    return kernel_rows.filter("kind = 'triple'").selectExpr(
+        "conv_id AS document_id", "text AS source", "obj AS target", "label AS type", "reason",
+        "conf AS confidence", "verb", "sentence AS source_sentence", "mdate AS date",
+        "mamount AS amount",
     )
 
 
 def events_from_kernel(kernel_rows: DataFrame) -> DataFrame:
-    return kernel_rows.filter(F.col("kind") == "event").select(
-        F.col("conv_id").alias("document_id"),
-        F.col("label").alias("event_type"),
-        F.col("text").alias("name"),
-        F.col("parts").alias("participants"),
-        F.col("mdate").alias("date"),
-        "location",
-        F.col("mamount").alias("amount"),
-        F.col("sentence").alias("context"),
-        F.col("conf").alias("confidence"),
+    return kernel_rows.filter("kind = 'event'").selectExpr(
+        "conv_id AS document_id", "label AS event_type", "text AS name",
+        "parts AS participants", "mdate AS date", "location", "mamount AS amount",
+        "sentence AS context", "conf AS confidence",
     )
 
 

@@ -11,19 +11,37 @@ Neo4j MERGE semantics re-expressed relationally:
   reproduces it: every endpoint is an entity text (V2, event
   participants) and every entity text is a node name (D3).
 * event nodes MERGE on (name, type) + one INVOLVES edge per participant
-  (graph_db.py:96-119): window keep-last + explode.
-* session clear (graph_db.py:147-151) = partition-predicate delete.
+  (graph_db.py:96-119): window keep-last + explode. INVOLVES edges share
+  the triple edges' keep-last window, so their ``document_id`` does not
+  depend on partitioning.
+* session clear (graph_db.py:147-151) = a ``session_id`` predicate.
 
-Tables write as parquet partitioned by session bucket; with an Iceberg
-catalog the same frames go through MERGE INTO (upsert) instead of the
-overwrite — the dedup logic is identical either way.
+The build-side frames are SQL text (``selectExpr``/``filter`` strings):
+a few py4j calls per operator instead of several per Column. The tables are
+written by the caller (the CLI's parquet directories, or
+``sources/graph_store.GraphStore``'s manifest commits).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal. Hex bytes need no escaping
+    whatever ``value`` holds or how the parser treats backslashes; the
+    optimizer folds the cast to a plain literal."""
+    return f"CAST(X'{value.encode().hex()}' AS STRING)"
+
+
+def _keep_last(df: DataFrame, keys: str, order: str, *columns: str) -> DataFrame:
+    """One row per ``keys``: the first by ``order``, projected to ``columns``."""
+    return (
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {keys} ORDER BY {order}) AS _rn")
+        .filter("_rn = 1")
+        .selectExpr(*columns)
+    )
 
 
 def build_nodes(entities: DataFrame, session_id: str = "batch") -> DataFrame:
@@ -31,87 +49,47 @@ def build_nodes(entities: DataFrame, session_id: str = "batch") -> DataFrame:
     order in the reference is entity list order per document, documents in
     arrival order; reproduced deterministically as (conv_id, is_forced,
     start_char) descending-last."""
-    w = Window.partitionBy("text", "type").orderBy(
-        F.col("conv_id").desc(), F.col("is_forced").desc(), F.col("start_char").desc()
-    )
-    return (
-        entities.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("text").alias("name"),
-            "type",
-            F.lit(session_id).alias("session_id"),
-            F.col("conv_id").alias("document_id"),
-            "source_sentence",
-        )
+    return _keep_last(
+        entities, "text, type", "conv_id DESC, is_forced DESC, start_char DESC",
+        "text AS name", "type", f"{_sql_string(session_id)} AS session_id",
+        "conv_id AS document_id", "source_sentence",
     )
 
 
-def build_edges(triples: DataFrame, session_id: str = "batch") -> DataFrame:
-    """D4 + S5 — dedup on (src, type, dst) keeping the last writer. No
-    endpoint needs anchoring against the nodes: a validated triple's
-    endpoints are entity texts of its document, and every entity text is
-    a node name, so the reference's MATCH-miss (graph_db.py:131-134)
-    never fires within a run."""
-    w = Window.partitionBy("source", "type", "target").orderBy(F.col("document_id").desc())
-    return (
-        triples.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("source").alias("src"),
-            "type",
-            F.col("target").alias("dst"),
-            "reason",
-            "confidence",
-            "verb",
-            "date",
-            "amount",
-            "source_sentence",
-            "document_id",
-            F.lit(session_id).alias("session_id"),
-        )
+def build_edges(triples: DataFrame, events: DataFrame, session_id: str = "batch") -> DataFrame:
+    """D4 + S5 + S6 — triple edges and one INVOLVES edge per (event,
+    participant), deduplicated on (src, type, dst) by ONE keep-last
+    window: the last writer by ``document_id`` wins. No triple type is
+    ``INVOLVES``, so no key mixes the two kinds of edge.
+
+    No endpoint needs anchoring against the nodes: a validated triple's
+    endpoints are entity texts of its document, participants are entity
+    texts, and every entity text is a node name, so the reference's
+    MATCH-miss (graph_db.py:131-134) never fires within a run."""
+    triple_edges = triples.selectExpr(
+        "source AS src", "type", "target AS dst", "reason", "confidence", "verb", "date",
+        "amount", "source_sentence", "document_id",
+    )
+    involves = events.selectExpr(
+        "name AS src", "'INVOLVES' AS type", "explode(participants) AS dst",
+        "CAST(NULL AS STRING) AS reason", "CAST(NULL AS DOUBLE) AS confidence",
+        "CAST(NULL AS STRING) AS verb", "CAST(NULL AS STRING) AS date",
+        "CAST(NULL AS STRING) AS amount", "CAST(NULL AS STRING) AS source_sentence",
+        "document_id",
+    )
+    return _keep_last(
+        triple_edges.unionByName(involves), "src, type, dst", "document_id DESC",
+        "src", "type", "dst", "reason", "confidence", "verb", "date", "amount",
+        "source_sentence", "document_id", f"{_sql_string(session_id)} AS session_id",
     )
 
 
 def build_event_nodes(events: DataFrame, session_id: str = "batch") -> DataFrame:
     """S6 — event nodes: MERGE on (name, event_type), last writer wins."""
-    w = Window.partitionBy("name", "event_type").orderBy(F.col("document_id").desc())
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "name",
-            "event_type",
-            "date",
-            "location",
-            "amount",
-            "context",
-            "document_id",
-            "confidence",
-            F.lit(session_id).alias("session_id"),
-        )
-    )
-
-
-def build_involves(events: DataFrame, session_id: str = "batch") -> DataFrame:
-    """S6 — one INVOLVES edge per (event, participant); participants are
-    entity texts, so every edge resolves (see build_edges)."""
-    return (
-        events.select("document_id", "name", F.explode("participants").alias("participant"))
-        .select(
-            F.col("name").alias("src"),
-            F.lit("INVOLVES").alias("type"),
-            F.col("participant").alias("dst"),
-            F.lit(None).cast("string").alias("reason"),
-            F.lit(None).cast("double").alias("confidence"),
-            F.lit(None).cast("string").alias("verb"),
-            F.lit(None).cast("string").alias("date"),
-            F.lit(None).cast("string").alias("amount"),
-            F.lit(None).cast("string").alias("source_sentence"),
-            "document_id",
-            F.lit(session_id).alias("session_id"),
-        )
-        .dropDuplicates(["src", "type", "dst"])
+    return _keep_last(
+        events, "name, event_type", "document_id DESC",
+        "name", "event_type", "date", "location", "amount", "context", "document_id",
+        "confidence", f"{_sql_string(session_id)} AS session_id",
     )
 
 
@@ -223,7 +201,7 @@ def viz_edges(edges: DataFrame) -> DataFrame:
 
 
 def clear_session(df: DataFrame, session_id: str) -> DataFrame:
-    """S8 — session clear as a predicate (DELETE WHERE on Iceberg;
-    filtered rewrite on parquet). Null-preserving: rows with no
-    session_id must survive a clear of any named session."""
+    """S8 — session clear as a predicate (a filtered rewrite).
+    Null-preserving: rows with no session_id must survive a clear of any
+    named session."""
     return df.filter(F.col("session_id").isNull() | (F.col("session_id") != session_id))

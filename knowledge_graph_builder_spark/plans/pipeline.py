@@ -42,7 +42,7 @@ from ..operators.extraction import (
     force_detect_hits_from_documents,
     triples_from_kernel,
 )
-from ..operators.graph import build_edges, build_involves, build_nodes
+from ..operators.graph import build_edges, build_nodes
 from ..operators.relationships import (
     attach_sentence_and_metadata,
     candidate_relationships,
@@ -168,6 +168,30 @@ class Checkpointer:
         return self.spark.read.parquet(self._sidecar_path(name))
 
 
+def _input_fingerprint(transcripts: DataFrame, options: str) -> str:
+    """Input fingerprint for resume safety: the logical plan string names
+    the concrete sources (paths/tables), so pointing the same run_id at
+    different input invalidates every cached stage."""
+    import hashlib
+
+    plan_str = transcripts._jdf.queryExecution().logical().toString()
+    mem_fp = ""
+    if "LogicalRDD" in plan_str or "LocalRelation" in plan_str:
+        # in-memory inputs (createDataFrame) put only schema + session-
+        # local expression ids in the plan string — two different datasets
+        # in two processes can print identically, silently resuming from
+        # the other's checkpoints. Fingerprint the rows themselves (one
+        # cheap aggregate).
+        from pyspark.sql import functions as F
+
+        row = transcripts.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64(*transcripts.columns).cast("decimal(38,0)")).alias("h"),
+        ).collect()[0]
+        mem_fp = f"|mem={row['n']}:{row['h']}"
+    return hashlib.md5((plan_str + options + mem_fp).encode()).hexdigest()[:16]
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -201,11 +225,6 @@ def run_pipeline(
     held so branches don't re-run the kernel. With a checkpoint_dir the
     parquet stage IS the materialization.
     """
-    # input fingerprint for resume safety: the logical plan string names
-    # the concrete sources (paths/tables), so pointing the same run_id at
-    # different input invalidates every cached stage
-    import hashlib
-
     if precap:
         # skew pre-cap: drop turns that provably cannot contribute to the
         # capped document BEFORE the conv_id shuffle (assembly.py docstring)
@@ -213,29 +232,12 @@ def run_pipeline(
 
         transcripts = precap_transcripts(transcripts)
 
-    plan_str = transcripts._jdf.queryExecution().logical().toString()
-    mem_fp = ""
-    if checkpoint_dir and ("LogicalRDD" in plan_str or "LocalRelation" in plan_str):
-        # in-memory inputs (createDataFrame) put only schema + session-
-        # local expression ids in the plan string — two different datasets
-        # in two processes can print identically, silently resuming from
-        # the other's checkpoints. Fingerprint the rows themselves (one
-        # cheap aggregate, only when resume is actually in play).
-        from pyspark.sql import functions as F
-
-        row = transcripts.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(*transcripts.columns).cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        mem_fp = f"|mem={row['n']}:{row['h']}"
-
-    fp = hashlib.md5(
-        (
-            plan_str
-            + f"|fused={fused}|parts={kernel_partitions}|clustered={assume_clustered}"
-            + mem_fp
-        ).encode()
-    ).hexdigest()[:16]
+    # only resume reads the fingerprint, and building it costs py4j round
+    # trips (and an aggregate job for in-memory input)
+    fp = ""
+    if checkpoint_dir:
+        options = f"|fused={fused}|parts={kernel_partitions}|clustered={assume_clustered}"
+        fp = _input_fingerprint(transcripts, options)
     ckpt = Checkpointer(checkpoint_dir, run_id, spark, fingerprint=fp)
 
     def _hold(df: DataFrame) -> DataFrame:
@@ -293,7 +295,7 @@ def run_pipeline(
         events = ckpt.stage("events", lambda: extract_events(kernel_rows, entities, sent_meta))
 
     nodes = build_nodes(entities, session_id)
-    edges = build_edges(triples, session_id).unionByName(build_involves(events, session_id))
+    edges = build_edges(triples, events, session_id)
 
     return PipelineResult(
         kernel_rows=kernel_rows,

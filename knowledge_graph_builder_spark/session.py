@@ -5,24 +5,43 @@ kernel, and shuffle partitions sized to the local core count.
 On a real cluster the same settings apply; only master/memory change
 (driven by spark-submit, whose settings win over these defaults).
 Nothing here is local-mode-specific logic.
+
+Python workers fork from the package's own daemon (``daemon.py``,
+``WORKER_DAEMON``), which stops every task from re-reading unchanged zip
+archives. ``get_spark`` selects it only when it starts the JVM itself and
+the workers can import the package (it is in the working directory, on
+``PYTHONPATH`` or in site-packages). Under a launcher (spark-submit with
+``--py-files``) the daemon process cannot import the package, so
+pyspark's own daemon stays. An explicit ``extra_conf`` value wins.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
+WORKER_DAEMON = {"spark.python.daemon.module": f"{__package__}.daemon"}
 
-def _launcher_conf() -> set[str]:
+
+def _launcher_conf() -> set[str] | None:
     """Keys a launcher (spark-submit, the pyspark shell) already set in
-    the JVM this process joined; empty when pyspark starts its own JVM."""
+    the JVM this process joined; None when pyspark starts its own JVM."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:  # pyspark/java_gateway.py
-        return set()
+        return None
     from pyspark import SparkConf, SparkContext
 
     SparkContext._ensure_initialized()
     return {k for k, _ in SparkConf().getAll()}
+
+
+def _workers_import_package() -> bool:
+    """Whether a Python worker finds this package: ``python -m`` puts the
+    working directory first on its path, then PYTHONPATH, site-packages."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def get_spark(
@@ -47,7 +66,9 @@ def get_spark(
     # under spark-submit the launcher's master and conf win over these
     # defaults; explicit arguments still win over both
     preset = _launcher_conf()
-    conf = {k: v for k, v in defaults.items() if k not in preset}
+    if preset is None and _workers_import_package():
+        defaults.update(WORKER_DAEMON)
+    conf = {k: v for k, v in defaults.items() if k not in (preset or ())}
     # The zero-shuffle pipeline (extract_from_transcripts
     # assume_clustered=True) depends on Spark honoring the bucketed
     # layout of the transcripts table. Spark 4.x's

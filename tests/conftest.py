@@ -1,6 +1,8 @@
 import pytest
 from pyspark.sql import SparkSession
 
+from knowledge_graph_builder_spark.session import WORKER_DAEMON
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -16,6 +18,8 @@ def spark():
         # (assume_clustered correctness depends on one-partition-per-bucket)
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from the package's daemon, as under get_spark
+        .config(map=WORKER_DAEMON)
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

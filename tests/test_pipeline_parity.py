@@ -43,12 +43,9 @@ EDGE_COLS = ["src", "type", "dst", "reason", "confidence", "verb", "date", "amou
 
 
 def _edge_rows(edges):
-    """Edges in comparable form. INVOLVES dedup is ``dropDuplicates``,
-    which keeps an arbitrary writer's ``document_id``, so that one column
-    is blanked on INVOLVES rows; every other column is deterministic."""
-    return edges.withColumn(
-        "document_id", F.when(F.col("type") != "INVOLVES", F.col("document_id"))
-    ).select(*EDGE_COLS)
+    """Edges in comparable form: every column, INVOLVES ``document_id``
+    included (INVOLVES edges keep the last writer like triple edges)."""
+    return edges.select(*EDGE_COLS)
 
 
 def _assert_equal(spark, transcripts):
@@ -98,7 +95,8 @@ INPUTS = {
 
 def _anchored_edges(res):
     """The anchored formula: D4 dedup, then semi-join both endpoints of
-    every triple, and every INVOLVES participant, against the node names."""
+    every triple, and every INVOLVES participant, against the node names;
+    INVOLVES edges keep the last writer by ``document_id``."""
     names = res.nodes.select("name").distinct()
     w = Window.partitionBy("source", "type", "target").orderBy(F.col("document_id").desc())
     triples = (
@@ -137,9 +135,8 @@ def _anchored_edges(res):
             "document_id",
             F.lit("batch").alias("session_id"),
         )
-        .dropDuplicates(["src", "type", "dst"])
     )
-    return triples.unionByName(involves)
+    return triples.unionByName(_keep_last(involves, ["src", "type", "dst"], ["document_id"]))
 
 
 @pytest.mark.parametrize("fused", [True, False], ids=["fused", "relational"])
@@ -170,5 +167,153 @@ def test_edges_plan_has_no_join(spark):
     # to the edge projection is visible, and nothing in it joins
     res = run_pipeline(spark, golden_transcripts(spark), fused=True, persist=False)
     ops = _plan_ops(res.edges)
-    assert "Window" in ops and "Aggregate" in ops  # the D4 window and the INVOLVES dedup
+    assert ops.count("Window") == 1, ops  # one keep-last over triple and INVOLVES edges
+    assert not [op for op in ops if "Aggregate" in op], ops
     assert not [op for op in ops if op.startswith("Join")], ops
+
+
+# -- the post-kernel plan is SQL text; these Column-DSL copies are its oracle --
+
+
+def _dsl_prelude(transcripts, partitions):
+    t = transcripts.select(
+        "conv_id", "text", F.coalesce("turn_idx", F.lit(-1)).alias("turn_idx")
+    ).filter(F.col("conv_id").isNotNull())
+    t = t.repartition(partitions, "conv_id").sortWithinPartitions("conv_id", "turn_idx", "text")
+    return t.select("conv_id", "text")
+
+
+def _dsl_entities(kr):
+    return kr.filter(F.col("kind") == "entity").select(
+        "conv_id", "text", F.col("label").alias("type"), "start_char", "end_char",
+        F.col("reason").alias("context"), F.col("sentence").alias("source_sentence"),
+        F.col("forced").alias("is_forced"),
+    )
+
+
+def _dsl_triples(kr):
+    return kr.filter(F.col("kind") == "triple").select(
+        F.col("conv_id").alias("document_id"), F.col("text").alias("source"),
+        F.col("obj").alias("target"), F.col("label").alias("type"), "reason",
+        F.col("conf").alias("confidence"), "verb", F.col("sentence").alias("source_sentence"),
+        F.col("mdate").alias("date"), F.col("mamount").alias("amount"),
+    )
+
+
+def _dsl_events(kr):
+    return kr.filter(F.col("kind") == "event").select(
+        F.col("conv_id").alias("document_id"), F.col("label").alias("event_type"),
+        F.col("text").alias("name"), F.col("parts").alias("participants"),
+        F.col("mdate").alias("date"), "location", F.col("mamount").alias("amount"),
+        F.col("sentence").alias("context"), F.col("conf").alias("confidence"),
+    )
+
+
+def _keep_last(df, keys, order):
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order])
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _dsl_nodes(entities, session_id):
+    return _keep_last(entities, ["text", "type"], ["conv_id", "is_forced", "start_char"]).select(
+        F.col("text").alias("name"), "type", F.lit(session_id).alias("session_id"),
+        F.col("conv_id").alias("document_id"), "source_sentence",
+    )
+
+
+def _dsl_edges(triples, events, session_id):
+    null = F.lit(None).cast("string")
+    triple_edges = triples.select(
+        F.col("source").alias("src"), "type", F.col("target").alias("dst"), "reason",
+        "confidence", "verb", "date", "amount", "source_sentence", "document_id",
+    )
+    involves = events.select(
+        F.col("name").alias("src"), F.lit("INVOLVES").alias("type"),
+        F.explode("participants").alias("dst"), null.alias("reason"),
+        F.lit(None).cast("double").alias("confidence"), null.alias("verb"), null.alias("date"),
+        null.alias("amount"), null.alias("source_sentence"), "document_id",
+    )
+    union = triple_edges.unionByName(involves)
+    return _keep_last(union, ["src", "type", "dst"], ["document_id"]).withColumn(
+        "session_id", F.lit(session_id)
+    )
+
+
+def _dsl_event_nodes(events, session_id):
+    return _keep_last(events, ["name", "event_type"], ["document_id"]).select(
+        "name", "event_type", "date", "location", "amount", "context", "document_id",
+        "confidence", F.lit(session_id).alias("session_id"),
+    )
+
+
+EVENT_NODE_COLS = ["name", "event_type", "date", "location", "amount", "context", "document_id", "confidence", "session_id"]
+
+
+def test_sql_text_plan_matches_column_dsl(spark):
+    """The SQL-text prelude, kernel projections and graph stage give
+    exactly the rows of the Column-DSL formulation they replaced,
+    including session ids a naively quoted SQL literal would break."""
+    from knowledge_graph_builder_spark.operators.extraction import (
+        EMIT_GRAPH,
+        _make_fused_kernel,
+        entities_from_kernel,
+        events_from_kernel,
+        extract_from_transcripts,
+        triples_from_kernel,
+    )
+    from knowledge_graph_builder_spark.operators.graph import build_edges, build_event_nodes, build_nodes
+    from knowledge_graph_builder_spark.schema import KERNEL_ROWS
+
+    transcripts = synth_transcripts(spark, n_convs=12, turns_per_conv=6, hot_conv_factor=3, seed=5)
+    kr = extract_from_transcripts(transcripts, 3, emit=EMIT_GRAPH).cache()
+    try:
+        dsl_kr = _dsl_prelude(transcripts, 3).mapInArrow(_make_fused_kernel(EMIT_GRAPH), KERNEL_ROWS)
+        assert _ms(kr, kr.columns) == _ms(dsl_kr, kr.columns)
+
+        entities, triples, events = entities_from_kernel(kr), triples_from_kernel(kr), events_from_kernel(kr)
+        for cols, got, want in (
+            (ENT_COLS, entities, _dsl_entities(kr)),
+            (TRI_COLS, triples, _dsl_triples(kr)),
+            (EV_COLS, events, _dsl_events(kr)),
+        ):
+            assert got.columns == want.columns
+            mg = _ms(got, cols)
+            assert mg == _ms(want, cols) and sum(mg.values()) > 0
+
+        for sid in ("batch", "it's", "a\\'b\\", "x' OR '1'='1", "日本", ""):
+            for cols, got, want in (
+                (NODE_COLS, build_nodes(entities, sid), _dsl_nodes(entities, sid)),
+                (EDGE_COLS, build_edges(triples, events, sid), _dsl_edges(triples, events, sid)),
+                (EVENT_NODE_COLS, build_event_nodes(events, sid), _dsl_event_nodes(events, sid)),
+            ):
+                assert got.columns == want.columns
+                assert got.schema == want.schema
+                mg = _ms(got, cols)
+                assert mg == _ms(want, cols) and sum(mg.values()) > 0, sid
+    finally:
+        kr.unpersist()
+
+
+PARTITION_SETTINGS = [(1, 1), (4, 4), (7, 13), (3, 2)]  # (kernel partitions, shuffle partitions)
+TABLE_COLS = {"nodes": NODE_COLS, "edges": EDGE_COLS, "triples": TRI_COLS, "events": EV_COLS}
+
+
+def test_outputs_invariant_under_partitioning(spark):
+    """The same input gives the same four tables whatever the kernel and
+    shuffle partition counts: every keep-last has a total order, and
+    INVOLVES edges take the triple edges' keep-last rule."""
+    transcripts = synth_transcripts(spark, n_convs=40, seed=11)
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    tables = []
+    try:
+        for kernel_parts, shuffle_parts in PARTITION_SETTINGS:
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_parts))
+            res = run_pipeline(spark, transcripts, kernel_partitions=kernel_parts, persist=False)
+            tables.append({name: _ms(getattr(res, name), cols) for name, cols in TABLE_COLS.items()})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert sum(tables[0]["edges"].values()) > 0
+    for setting, got in zip(PARTITION_SETTINGS[1:], tables[1:]):
+        for name in TABLE_COLS:
+            only_here = list((got[name] - tables[0][name]).keys())[:3]
+            assert got[name] == tables[0][name], f"{name} at {setting}: {only_here}"

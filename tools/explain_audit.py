@@ -76,6 +76,10 @@ def main(sf_dir: str) -> int:
     prk = plan_of(run_pipeline(spark, golden_transcripts(spark), fused=False, persist=False).kernel_rows)
     check("relational kernel is the same Arrow kernel (no pandas emission)",
           "MapInArrow" in prk and "MapInPandas" not in prk, prk[:400])
+    # triple and INVOLVES edges share ONE keep-last window; no aggregate
+    pe = plan_of(run_pipeline(spark, golden_transcripts(spark), persist=False).edges)
+    check("fused edges dedup is one Window and no Aggregate",
+          pe.count("Window [") == 1 and "Aggregate" not in pe, pe[:600])
 
     # 4) round-2 additions
     p10 = plan_of(entry.queries()["tpch_q10_top20"](spark, sf_dir))
