@@ -13,11 +13,19 @@ hot conversation (~100x median) to exercise the skew path.
 
 Every timed rep CONSTRUCTS AND EXECUTES a fresh job (persist=False): no
 rep ever counts a cached result, so the recorded wall is end-to-end
-pipeline throughput, not a cache scan.
+pipeline throughput, not a cache scan. Each rep also records the CPU
+seconds of this process tree and the host's steal seconds it took
+(perfbench/probes.py), so a slow sample can be told from a busy host.
+
+The N-vs-4N scaling levels come from the usable CPU count (the affinity
+mask): 2 -> 8 on 8 or more CPUs, 1 -> 4 on 4-7, none below 4.
+
+The full record goes to a new bench_records/<utc-stamp>-<pid>.json; no
+record is ever overwritten.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local core count (default 32)
+  SPARK_GRAFT_CPUS     local core count (default: the usable CPU count)
   KGB_BENCH_TURNS      override synthesized turn count
   KGB_SKIP_SCALING     1 = skip the N-vs-4N scaling evidence
 """
@@ -28,11 +36,16 @@ import json
 import os
 import sys
 import time
+from datetime import datetime, timezone
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+RECORD_DIR = os.path.join(REPO, "bench_records")
+sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from perfbench import probes
 
 
 def synth_transcripts_distributed(spark: SparkSession, n_turns: int, turns_per_conv: int = 8) -> DataFrame:
@@ -69,16 +82,15 @@ def synth_transcripts_distributed(spark: SparkSession, n_turns: int, turns_per_c
     )
 
 
-# ---------------------------------------------------------------- host load
+# ------------------------------------------------------------ measurement
 
 
 def _cpu_calibration() -> float:
     """Seconds for a FIXED single-thread workload (md5 over 64 MB) —
-    best of 3. A host-level slowdown that /proc/stat cannot see (reduced
+    best of 3. A host-level slowdown that steal time cannot see (reduced
     effective clock, hypervisor-side memory-bandwidth contention) shows
-    up here as a higher reading; recording it at bench start and at each
-    scaling sub-run makes cross-run comparisons attributable. Quiet-host
-    reference on this box: ~0.10-0.13 s."""
+    up here as a higher reading, so cross-run comparisons stay
+    attributable. Quiet-host reference on the 32-core box: ~0.10-0.13 s."""
     import hashlib
 
     buf = bytes(1024 * 1024)
@@ -92,83 +104,95 @@ def _cpu_calibration() -> float:
     return round(best, 4)
 
 
-def _cpu_calibration_parallel(n_threads: int = 8) -> float:
-    """Wall seconds for ``n_threads`` concurrent copies of the single-
-    thread workload (hashlib releases the GIL on large updates, so these
-    genuinely run in parallel). On a healthy UNPINNED host this ≈ the
-    single-thread number; contention shows up as this reading rising
-    above it. Quiet unpinned reference on this box: ~0.11-0.15 s.
-    INTERPRETATION CAVEAT: inside a taskset-pinned scaling sub-run the
-    expected healthy value is serial × (n_threads / pinned_cores) — e.g.
-    ~0.4 s in the 2-core sub-run — because the 8 threads share the
-    pinned cores; compare like with like across runs, not across levels."""
-    import hashlib
-    import threading
-
-    buf = bytes(1024 * 1024)
-
-    def work():
-        h = hashlib.md5()
-        for _ in range(64):
-            h.update(buf)
-
-    best = float("inf")
-    for _ in range(2):
-        threads = [threading.Thread(target=work) for _ in range(n_threads)]
-        t0 = time.monotonic()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        best = min(best, time.monotonic() - t0)
-    return round(best, 4)
+_TICK = os.sysconf("SC_CLK_TCK")
 
 
-def _other_busy_cores(interval: float = 0.5) -> float:
-    """Cores currently busy on the HOST (from /proc/stat deltas). Used to
-    gate scaling sub-runs: with our own JVM stopped, anything busy is
-    background load that would contaminate the measurement."""
-    def snap():
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return sum(vals), idle
-
-    t1, i1 = snap()
-    time.sleep(interval)
-    t2, i2 = snap()
-    dt, di = t2 - t1, i2 - i1
-    if dt <= 0:
-        return 0.0
-    ncpu = os.cpu_count() or 1
-    return round((dt - di) / dt * ncpu, 2)
+def _cpu_ticks() -> dict[tuple[int, str], int]:
+    """CPU clock ticks (user + system, reaped children included) of each
+    process in this process tree (the driver JVM, the Python worker
+    daemon and its workers), keyed by (pid, start time)."""
+    ticks = {}
+    for pid in probes.process_tree(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue  # exited while listing
+        ticks[(pid, fields[19])] = sum(map(int, fields[11:15]))
+    return ticks
 
 
-def _wait_for_quiet(max_busy: float = 2.0, timeout: float = 180.0) -> float:
-    """Wait (bounded) until background load drops below max_busy cores;
-    return the last reading so the bench record shows the conditions each
-    sub-run actually started under."""
-    deadline = time.monotonic() + timeout
-    busy = _other_busy_cores()
-    while busy > max_busy and time.monotonic() < deadline:
-        time.sleep(2.0)
-        busy = _other_busy_cores()
-    return busy
+def _cpu_s_since(before: dict[tuple[int, str], int]) -> float:
+    """CPU seconds this process tree spent since ``before`` (a _cpu_ticks
+    reading). A process that exited meanwhile drops out. Differences of
+    probes.tree_cpu_s would subtract its whole past instead: Spark kills
+    Python workers idle for 60 s, and the pyspark daemon ignores SIGCHLD,
+    so their time never reaches its reaped-children count (one tpch_q1
+    rep read -49.9 s that way)."""
+    return round(sum(t - before.get(k, 0) for k, t in _cpu_ticks().items()) / _TICK, 2)
+
+
+def _measured(fn):
+    """Run ``fn`` once. Returns its result, its wall seconds, the CPU
+    seconds this process tree spent meanwhile and the host's steal
+    seconds meanwhile."""
+    cpu0, steal0 = _cpu_ticks(), probes.host_steal_s()
+    t0 = time.monotonic()
+    out = fn()
+    wall = time.monotonic() - t0
+    return out, round(wall, 3), _cpu_s_since(cpu0), round(probes.host_steal_s() - steal0, 2)
+
+
+def scaling_levels(cpus: int) -> tuple[int, int]:
+    """(N, 4N) for ``cpus`` usable CPUs, with N = min(2, cpus // 4): 8 or
+    more CPUs give 2 -> 8 (``_run_scaling`` says why not 8 -> 32), 4-7
+    give 1 -> 4. Below 4 CPUs no pair fits, and ValueError says so."""
+    n = min(2, cpus // 4)
+    if n == 0:
+        raise ValueError(f"{cpus} usable CPUs: an N -> 4N pair needs at least 4")
+    return n, 4 * n
+
+
+def scaling_turns(n_turns: int, n: int) -> int:
+    """Scaling input: 6x the headline turn count and at least 2.4M turns
+    at N = 2, scaled by N/2 so that every N gets the same turns per core.
+    The large input makes per-core work dominate the ~2.5 s fixed per-job
+    cost at both levels. Measured on the 32-core box (quiet host, pinned,
+    2 -> 8): 1.6M turns -> ratio 3.58 (eff 0.895); 2.4M turns -> ratio
+    4.09 (eff 1.02)."""
+    return max(n_turns * 6, 2_400_000) * n // 2
+
+
+def write_record(record: dict, directory: str = RECORD_DIR) -> str:
+    """Write ``record`` to a new ``<utc-stamp>-<pid>.json`` in ``directory``
+    and return its path. The stamp has microseconds and the file is
+    created exclusively, so a record is never overwritten: a name clash
+    raises FileExistsError instead."""
+    os.makedirs(directory, exist_ok=True)
+    stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S%fZ")
+    path = os.path.join(directory, f"{stamp}-{os.getpid()}.json")
+    with open(path, "x") as fh:
+        json.dump(record, fh, indent=1)
+    return path
 
 
 # ------------------------------------------------------------ scaling runs
 
 
-def _pipeline_only(cpus: int, transcripts_path: str, n_turns: int, reps: int) -> None:
-    """Subprocess mode for the scaling evidence: run ONLY the KG pipeline
-    at local[cpus] on a pre-written transcripts parquet; print one JSON
-    line with EVERY sample. Warm-up run first (JIT/codegen/Python-worker
-    spawn are one-time JVM costs, not per-job throughput)."""
+def _pipeline_only(cpus: int, transcripts_path: str, reps: int) -> None:
+    """Subprocess mode for the scaling evidence. Pins this process to the
+    first ``cpus`` of its usable CPUs before the JVM starts (the JVM and
+    its Python workers inherit the pin), runs ONLY the KG pipeline at
+    local[cpus] on a pre-written transcripts parquet, and prints one JSON
+    line: the affinity it ran with, every sample, the CPU and steal
+    seconds of each rep and of the whole sub-run. Warm-up run first
+    (JIT/codegen/Python-worker spawn are one-time JVM costs, not per-job
+    throughput)."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cpus])
+    cpu0, steal0 = _cpu_ticks(), probes.host_steal_s()
     from knowledge_graph_builder_spark.plans.pipeline import run_pipeline
     from knowledge_graph_builder_spark.session import get_spark
 
-    calib = _cpu_calibration()  # before the JVM exists: pure host speed
-    calib_par = _cpu_calibration_parallel()
     spark = get_spark(
         app_name=f"kgb-scale-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
@@ -176,79 +200,67 @@ def _pipeline_only(cpus: int, transcripts_path: str, n_turns: int, reps: int) ->
     run_pipeline(
         spark, transcripts.limit(20000), kernel_partitions=cpus, persist=False
     ).triples.count()
-    samples: list[float] = []
-    n_triples = 0
-    for _ in range(reps):
-        t0 = time.monotonic()
-        res = run_pipeline(spark, transcripts, kernel_partitions=cpus, persist=False)
-        n_triples = res.triples.count()
-        samples.append(round(time.monotonic() - t0, 3))
-    best = min(samples)
+    measured = [
+        _measured(lambda: run_pipeline(spark, transcripts, kernel_partitions=cpus, persist=False).triples.count())
+        for _ in range(reps)
+    ]
+    n_triples, samples, rep_cpu, rep_steal = map(list, zip(*measured))
     print(json.dumps({
         "cpus": cpus,
-        "best_sec": best,
+        "affinity": len(os.sched_getaffinity(0)),
         "samples_sec": samples,
-        "turns_per_sec": round(n_turns / best, 1),
-        "n_triples": n_triples,
-        "cpu_calibration_sec": calib,
-        "cpu_calibration_parallel_sec": calib_par,
+        "rep_cpu_s": rep_cpu,
+        "rep_steal_s": rep_steal,
+        "cpu_s": _cpu_s_since(cpu0),
+        "host_steal_s": round(probes.host_steal_s() - steal0, 2),
+        "n_triples": n_triples[-1],
     }))
     spark.stop()
 
 
-def _run_scaling(transcripts_path: str, n_turns: int) -> dict:
+def _run_scaling(transcripts_path: str, n_turns: int, levels: tuple[int, int]) -> dict:
     """north_rule scaling evidence: the same job at local[N] and
     local[4N] on the same input; efficiency = (thr_4N / thr_N) / 4.
     Each level runs in its own JVM via a subprocess of this script.
 
-    N=2 -> 4N=8: both levels leave the 32-core box ample headroom, so the
-    measurement isolates the JOB's scaling — the quantity the rule's
-    N-vs-4N-EXECUTOR criterion describes. On a single box, higher worker
-    counts share one memory bus: measured per-core parallel-Python ceilings
-    are ~0.90 (4->16) and ~0.75 (8->32) REGARDLESS of the job, an artifact
-    with no cluster counterpart (4N executors bring 4x the memory buses).
-    BASELINE.md records all three pairs; 2->8 measures ~0.95-1.0.
+    2 -> 8 where the host allows it: both levels leave a 32-core box ample
+    headroom, so the measurement isolates the JOB's scaling — the quantity
+    the rule's N-vs-4N-EXECUTOR criterion describes. On a single box,
+    higher worker counts share one memory bus: measured per-core
+    parallel-Python ceilings are ~0.90 (4->16) and ~0.75 (8->32)
+    REGARDLESS of the job, an artifact with no cluster counterpart (4N
+    executors bring 4x the memory buses). BASELINE.md records all three
+    pairs; 2->8 measures ~0.95-1.0.
 
-    Each sub-run is PINNED (taskset) to exactly `cpus` physical cores.
-    local[N] alone bounds task SLOTS, not host CPU: the JVM's GC/shuffle/
-    Arrow-writer service threads and the Python kernel workers overlap the
-    task threads and spill onto idle host cores, which a dedicated
-    N-core executor does not have. Measured on this box: the unpinned
-    local[2] run borrows idle-core CPU (measured 10-35% across runs),
+    Each sub-run is PINNED to exactly its level's CPUs and proves it: a
+    sub-run whose affinity differs from its level raises, so the record
+    shows an error instead of a ratio measured on the wrong core count.
+    local[N] alone bounds task SLOTS, not host CPU: the JVM's
+    GC/shuffle/Arrow-writer service threads and the Python kernel workers
+    overlap the task threads and spill onto idle host cores, which a
+    dedicated N-core executor does not have. Measured on the 32-core box:
+    the unpinned local[2] run borrows idle-core CPU (10-35% across runs),
     understating efficiency to 0.64-0.79 even though the pinned levels
-    scale at 0.90-1.07 — pinning makes the sandbox stand-in faithful to
-    "an executor with N cores" at both levels.
+    scale at 0.90-1.07.
 
-    Noise hardening (the r01 driver record caught a 0.638 under background
-    host load): sub-runs are ABBA-interleaved (2,8,8,2) so a load window
-    cannot systematically bias one level; each sub-run waits for the host
-    to go quiet first and records the residual busy-core reading; every
-    sample lands in the record. Best-of across samples per level, because
-    the rule's quantity is achievable throughput at each parallelism, not
-    the sandbox noise floor. The 8-core level takes 3 reps per sub-run
-    (each rep is ~4x cheaper than a 2-core rep, and the efficiency
-    estimate is most sensitive to an inflated 8-core best). If the
-    estimate still lands near/below the 0.8 threshold, up to two extra
-    (8,2) pairs are appended — more samples only tighten the same
-    best-of estimator.
-
-    Input sizing: the scaling input is 6x the headline turn count
-    (>=2.4M turns) so per-core work dominates the ~2.5s fixed per-job
-    cost at both levels. Measured on this box (quiet host, pinned):
-    1.6M turns -> ratio 3.58 (eff 0.895); 2.4M turns -> ratio 4.09
-    (eff 1.02) — the larger input is the regime the rule's
-    N-vs-4N-executor criterion describes, where a 10% noise hit on one
-    level still leaves the record clear of 0.8."""
-    import shutil
+    One ABBA pass (N, 4N, 4N, N), so a drifting background load cannot
+    systematically bias one level; every sample lands in the record with
+    the CPU and steal seconds of its rep and sub-run. Best-of across
+    samples per level, because the rule's quantity is achievable
+    throughput at each parallelism, not the sandbox noise floor; the
+    per-pair efficiencies (pairs in arrival order, each measured
+    back to back) cancel common-mode slowdown. The 4N level takes 4 reps
+    per sub-run: each rep is ~4x cheaper than an N rep, and the estimate
+    is most sensitive to an inflated 4N best."""
     import subprocess
 
-    pin = shutil.which("taskset")
+    cpus_of = dict(zip(("n", "4n"), levels))
 
-    def sub_run(cpus: int, reps: int) -> dict:
-        busy = _wait_for_quiet()
-        cmd = ([pin, "-c", f"0-{cpus - 1}"] if pin else []) + [
+    def sub_run(level: str) -> dict:
+        cpus = cpus_of[level]
+        cmd = [
             sys.executable, os.path.abspath(__file__), "--pipeline-only", str(cpus),
-            transcripts_path, str(n_turns), str(reps),
+            transcripts_path, str(4 if level == "4n" else 2),
         ]
         proc = subprocess.run(cmd, capture_output=True, text=True, timeout=1200)
         lines = [l for l in proc.stdout.splitlines() if l.startswith('{"cpus"')]
@@ -258,85 +270,39 @@ def _run_scaling(transcripts_path: str, n_turns: int) -> dict:
                 f"{proc.stderr.strip()[-400:]}"
             )
         out = json.loads(lines[-1])
-        out["host_busy_cores_at_start"] = busy
+        if out["affinity"] != cpus:
+            raise RuntimeError(f"scaling sub-run local[{cpus}] ran on {out['affinity']} CPUs")
         return out
 
-    levels = (2, 8)
-    samples: dict[int, list[float]] = {c: [] for c in levels}
-    sub_bests: dict[int, list[float]] = {c: [] for c in levels}
-    busy_at: dict[int, list[float]] = {c: [] for c in levels}
-    calib_at: dict[int, list[float]] = {c: [] for c in levels}
-    n_triples = 0
+    runs: dict[str, list[dict]] = {"n": [], "4n": []}
+    for level in ("n", "4n", "4n", "n"):
+        runs[level].append(sub_run(level))
 
-    def run_and_record(cpus: int) -> None:
-        nonlocal n_triples
-        out = sub_run(cpus, 4 if cpus == 8 else 2)
-        samples[cpus].extend(out["samples_sec"])
-        sub_bests[cpus].append(min(out["samples_sec"]))
-        busy_at[cpus].append(out["host_busy_cores_at_start"])
-        calib_at[cpus].append(
-            (out.get("cpu_calibration_sec", -1.0), out.get("cpu_calibration_parallel_sec", -1.0))
-        )
-        n_triples = out["n_triples"]
+    def per_level(field: str) -> dict[str, list]:
+        return {level: [r[field] for r in rs] for level, rs in runs.items()}
 
-    def efficiency() -> float:
-        thr = {c: n_turns / min(samples[c]) for c in levels}
-        return thr[8] / thr[2] / 4.0
-
-    for cpus in (2, 8, 8, 2):  # ABBA: cancels drifting background load
-        run_and_record(cpus)
-    extra_pairs = 0
-    while efficiency() < 0.84 and extra_pairs < 3:
-        # near/below threshold: tighten with another (8,2) pair. Noise can
-        # only SLOW a pinned run, so extra samples only sharpen the
-        # per-level minimum — the estimator never drifts optimistic.
-        run_and_record(8)
-        run_and_record(2)
-        extra_pairs += 1
-    cooldowns = 0
-    while efficiency() < 0.84 and cooldowns < 2:
-        # still low after the retry pairs: a SUSTAINED host-level slowdown
-        # (visible as an elevated cpu_calibration_sec, invisible to the
-        # busy-core probe) degrades the 8-core level harder (memory
-        # bandwidth), dragging the ratio down. Wait out the episode
-        # (bounded) and measure one more pair — recorded like every other.
-        time.sleep(240)
-        run_and_record(8)
-        run_and_record(2)
-        cooldowns += 1
-
-    thr = {c: round(n_turns / min(samples[c]), 1) for c in levels}
-    # drift-robust secondary estimator: efficiency per (2,8) sub-run
-    # pair, pairing by arrival order — a pair measured inside the same
-    # host window cancels common-mode slowdown (the differential 8-core
-    # hit remains visible, which is the honest part)
-    pairwise = [
-        round((n_turns / b8) / (n_turns / b2) / 4.0, 3)
-        for b2, b8 in zip(sub_bests[2], sub_bests[8])
-    ]
-    # self-describing record: flag when the ABSOLUTE walls sit far off
-    # this box's documented healthy reference (BASELINE.md: 8-core best
-    # 19.8-24.3 s, 2-core 77.8-89 s at this input) — the
-    # hypervisor-degradation signature that busy-core readings miss
-    degraded = min(samples[8]) > 28.0 or min(samples[2]) > 95.0
+    samples = {level: [s for r in rs for s in r["samples_sec"]] for level, rs in runs.items()}
+    bests = {level: [min(r["samples_sec"]) for r in rs] for level, rs in runs.items()}
+    thr = {level: n_turns / min(s) for level, s in samples.items()}
     return {
-        "cpus_n": 2,
-        "cpus_4n": 8,
-        "turns_per_sec_n": thr[2],
-        "turns_per_sec_4n": thr[8],
-        "wall_n_sec": min(samples[2]),
-        "wall_4n_sec": min(samples[8]),
-        "samples_n_sec": samples[2],
-        "samples_4n_sec": samples[8],
-        "sub_run_bests_sec": {"n": sub_bests[2], "4n": sub_bests[8]},
-        "pairwise_efficiencies": pairwise,
-        "host_busy_cores_at_start": {"n": busy_at[2], "4n": busy_at[8]},
-        "cpu_calibration_sec": {"n": calib_at[2], "4n": calib_at[8]},
-        "host_degraded_vs_reference": degraded,
-        "healthy_reference_sec": {"4n": [19.8, 24.3], "n": [77.8, 89.0]},
-        "pinned_cores": bool(pin),
-        "n_triples": n_triples,
-        "scaling_efficiency": round(efficiency(), 3),
+        "cpus_n": cpus_of["n"],
+        "cpus_4n": cpus_of["4n"],
+        "turns": n_turns,
+        "turns_per_sec_n": round(thr["n"], 1),
+        "turns_per_sec_4n": round(thr["4n"], 1),
+        "wall_n_sec": min(samples["n"]),
+        "wall_4n_sec": min(samples["4n"]),
+        "samples_n_sec": samples["n"],
+        "samples_4n_sec": samples["4n"],
+        "sub_run_bests_sec": bests,
+        "pairwise_efficiencies": [round(b_n / b_4n / 4.0, 3) for b_n, b_4n in zip(bests["n"], bests["4n"])],
+        "affinity": per_level("affinity"),
+        "rep_cpu_s": per_level("rep_cpu_s"),
+        "rep_steal_s": per_level("rep_steal_s"),
+        "cpu_s": per_level("cpu_s"),
+        "host_steal_s": per_level("host_steal_s"),
+        "n_triples": runs["4n"][-1]["n_triples"],
+        "scaling_efficiency": round(thr["4n"] / thr["n"] / 4.0, 3),
     }
 
 
@@ -345,7 +311,10 @@ def _run_scaling(transcripts_path: str, n_turns: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # usable CPUs: the affinity mask, not the host's core count (the same
+    # count perfbench/run.py uses)
+    usable_cpus = len(os.sched_getaffinity(0))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(usable_cpus)))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     n_turns = int(os.environ.get("KGB_BENCH_TURNS", str(int(4_000_000 * sf))))
 
@@ -370,9 +339,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, object] = {}
     extras["cpu_calibration_sec"] = _cpu_calibration()
-    extras["cpu_calibration_parallel_sec"] = _cpu_calibration_parallel()
-    rep_host_busy: dict[str, list[float]] = {}
     rep_samples: dict[str, list[float]] = {}
+    rep_cpu_s: dict[str, list[float]] = {}
+    rep_steal_s: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
 
     def guarded(name: str, fn):
@@ -396,11 +365,11 @@ def main() -> None:
         the sandbox VM shows host-level CPU steal that can uniformly
         inflate a single sample 2-3x; the minimum is the machine's
         achievable number, which is what BASELINE compares. Every rep
-        records the HOST's busy-core reading at its start (r03 showed a
-        uniform cross-query slowdown the record couldn't attribute to
-        host load because only the scaling sub-runs logged it)."""
-        best, out = float("inf"), None
-        busy, samples = [], []
+        records its CPU and steal seconds (r03 showed a uniform
+        cross-query slowdown the record couldn't attribute to host
+        load)."""
+        out = None
+        samples, cpu_s, steal_s = [], [], []
         for _ in range(reps):
             # JMH-style hygiene: force a JVM GC so the ContextCleaner
             # retires the PREVIOUS query's shuffle files/broadcasts before
@@ -413,27 +382,22 @@ def main() -> None:
             # plan, so an identical query would silently cache-hit and
             # the "best" would measure a cache read, not the operator)
             spark.catalog.clearCache()
-            # bounded wait for background load to clear before the rep
-            # starts (the r04 canonicalize reps caught a 1.7-busy-core
-            # window and read 2x over steady state; a 20 s bounded wait
-            # costs little and the residual reading is recorded either way)
-            busy.append(_wait_for_quiet(max_busy=1.0, timeout=20.0))
-            t0 = time.monotonic()
             # a failing rep (transient FS/executor error) must not lose
             # the whole record — record the error, let remaining reps try
             try:
-                out = fn()
+                out, wall, cpu, steal = _measured(fn)
             except Exception as exc:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 continue
-            dt = time.monotonic() - t0
-            samples.append(round(dt, 3))
-            best = min(best, dt)
+            samples.append(wall)
+            cpu_s.append(cpu)
+            steal_s.append(steal)
         if samples:
-            timings[name] = round(best, 3)
+            timings[name] = min(samples)
             errors.pop(name, None)  # a later rep succeeded; keep the number
-        rep_host_busy[name] = busy
         rep_samples[name] = samples
+        rep_cpu_s[name] = cpu_s
+        rep_steal_s[name] = steal_s
         return out
 
     # headline 1: full KG pipeline (fused single-shuffle path), turns/sec.
@@ -616,21 +580,25 @@ def main() -> None:
         timed("stream_dsir_drain", _stream_dsir_drain)
     shutil.rmtree(sdsir_base, ignore_errors=True)
 
-    # north_rule scaling evidence: local[2] vs local[8], fresh JVM each
-    # (skippable via KGB_SKIP_SCALING=1 for quick iteration). Runs on a 6x
-    # larger input than the headline so per-core work dominates the fixed
-    # per-job latency at both parallelism levels — the regime the rule's
-    # N-vs-4N-executor criterion describes.
+    # north_rule scaling evidence: local[N] vs local[4N], fresh JVM each
+    # (skippable via KGB_SKIP_SCALING=1 for quick iteration), on a larger
+    # input than the headline so per-core work dominates the fixed per-job
+    # latency at both parallelism levels.
     if os.environ.get("KGB_SKIP_SCALING") != "1":
-        scaling_turns = max(n_turns * 6, 2_400_000)
-        synth_transcripts_distributed(spark, scaling_turns).write.mode("overwrite").parquet(
-            "/tmp/kgb_scaling_transcripts"
-        )
-        spark.stop()  # free the 32 local cores for the measured subprocesses
         try:
-            extras["scaling"] = _run_scaling("/tmp/kgb_scaling_transcripts", scaling_turns)
-        except Exception as exc:  # a failed sub-run must not lose the whole bench record
-            extras["scaling"] = {"error": str(exc)[:300]}
+            levels = scaling_levels(usable_cpus)
+        except ValueError as exc:
+            extras["scaling"] = {"skipped": str(exc)}
+        else:
+            scaling_n = scaling_turns(n_turns, levels[0])
+            synth_transcripts_distributed(spark, scaling_n).write.mode("overwrite").parquet(
+                "/tmp/kgb_scaling_transcripts"
+            )
+            spark.stop()  # free the CPUs for the measured subprocesses
+            try:
+                extras["scaling"] = _run_scaling("/tmp/kgb_scaling_transcripts", scaling_n, levels)
+            except Exception as exc:  # a failed sub-run must not lose the whole bench record
+                extras["scaling"] = {"error": str(exc)[:300]}
 
     total = round(sum(timings.values()), 3)
     full_record = {
@@ -639,27 +607,26 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "rep_samples_sec": rep_samples,
-        "rep_host_busy_cores": rep_host_busy,
+        "rep_cpu_s": rep_cpu_s,
+        "rep_steal_s": rep_steal_s,
         "sf": sf,
         "cpus": cpus,
         "errors": errors,
         **extras,
     }
-    # The FULL record (per-rep samples, host-load readings, calibration,
-    # every scaling sample) outgrew the driver's stdout tail-capture in
-    # round 4 — BENCH_r04 recorded "parsed": null because the one JSON
-    # line was truncated. It now goes to a file; stdout gets a COMPACT
-    # line (<1 KB) with only the headline numbers the record needs.
-    record_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_record.json")
+    # The FULL record (per-rep samples, CPU and steal seconds, every
+    # scaling sample) outgrew the driver's stdout tail-capture in round 4
+    # — BENCH_r04 recorded "parsed": null because the one JSON line was
+    # truncated. It now goes to a file; stdout gets a COMPACT line (<1 KB)
+    # with only the headline numbers the record needs.
     try:
-        with open(record_path, "w") as fh:
-            json.dump(full_record, fh, indent=1)
+        record_file = os.path.relpath(write_record(full_record), REPO)
     except OSError as exc:
         # a full disk / read-only dir must not kill the run AFTER every
         # section completed — the compact stdout line below is the
         # driver's record of last resort and must still print
         errors["record_file"] = f"{type(exc).__name__}: {exc}"
-        record_path = None
+        record_file = None
     scaling = extras.get("scaling")
     compact_scaling = None
     if isinstance(scaling, dict):
@@ -667,7 +634,7 @@ def main() -> None:
             k: scaling.get(k)
             for k in (
                 "cpus_n", "cpus_4n", "turns_per_sec_n", "turns_per_sec_4n",
-                "scaling_efficiency", "host_degraded_vs_reference", "error",
+                "scaling_efficiency", "host_steal_s", "error", "skipped",
             )
             if k in scaling
         }
@@ -685,7 +652,7 @@ def main() -> None:
                 "turns_per_sec": extras.get("turns_per_sec"),
                 "cpu_calibration_sec": extras.get("cpu_calibration_sec"),
                 "scaling": compact_scaling,
-                "record_file": "bench_record.json" if record_path else None,
+                "record_file": record_file,
                 # keep the compact line small: first 5 errors, clipped hard
                 **(
                     {
@@ -702,8 +669,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 5 and sys.argv[1] == "--pipeline-only":
-        reps = int(sys.argv[5]) if len(sys.argv) >= 6 else 2
-        _pipeline_only(int(sys.argv[2]), sys.argv[3], int(sys.argv[4]), reps)
+    if len(sys.argv) >= 4 and sys.argv[1] == "--pipeline-only":
+        reps = int(sys.argv[4]) if len(sys.argv) >= 5 else 2
+        _pipeline_only(int(sys.argv[2]), sys.argv[3], reps)
     else:
         main()

@@ -336,33 +336,6 @@ def normalized_name_col(text: Column, ctype: Column) -> Column:
     )
 
 
-def force_detect_hits(transcripts: DataFrame) -> DataFrame:
-    """P6 presence scan, computed from TURNS rather than assembled
-    documents: the force-detect products (reference nlp_engine.py:198)
-    contain no whitespace, and turns are joined with a space, so
-    `product in lower(document)` is exactly `any turn contains product`.
-    This keeps P6 a map-side-combinable aggregation — no document
-    assembly (at 10^12 turns the assembled-string groupBy would dominate
-    the whole entity stage).
-
-    Returns (conv_id, product, start_char) with start_char the in-turn
-    position of the first hit (first by turn_idx, then position) — a
-    surrogate for the reference's document-level find() offset, which
-    nothing downstream consumes semantically.
-    """
-    prods = F.explode(F.array(*[F.lit(p) for p in FORCE_DETECT_PRODUCTS])).alias("product")
-    per_turn = transcripts.select("conv_id", "turn_idx", F.lower(F.col("text")).alias("_lt")).select(
-        "conv_id", "turn_idx", "_lt", prods
-    )
-    hits = per_turn.withColumn("pos", F.instr(F.col("_lt"), F.col("product"))).filter(F.col("pos") > 0)
-    first_hit = hits.groupBy("conv_id", "product").agg(
-        F.min(F.struct("turn_idx", "pos")).alias("first")
-    )
-    return first_hit.select(
-        "conv_id", "product", (F.col("first.pos") - 1).cast("int").alias("start_char")
-    )
-
-
 def force_detect_hits_from_documents(documents: DataFrame) -> DataFrame:
     """P6 presence scan over assembled documents (exact reference offsets;
     used by the non-fused path and tests). Scans the CLEANED document —
@@ -389,8 +362,7 @@ def entity_stage(kernel_rows: DataFrame, force_hits: DataFrame) -> tuple[DataFra
     metadata: E3 — DATE/MONEY/PERCENT/CARDINAL/ORDINAL rows bucketed with
     their enclosing sentence (reference nlp_engine.py:103-134).
 
-    ``force_hits``: output of force_detect_hits(transcripts) or
-    force_detect_hits_from_documents(documents).
+    ``force_hits``: output of force_detect_hits_from_documents(documents).
     """
     mentions = kernel_rows.filter(F.col("kind") == "mention")
 

@@ -386,13 +386,3 @@ def attach_sentence_and_metadata(
         F.when(F.col("attach_metadata"), F.col("date")).alias("date"),
         F.when(F.col("attach_metadata"), F.col("amount")).alias("amount"),
     )
-
-
-def extract_relationships(kernel_rows: DataFrame, sentence_metadata: DataFrame) -> DataFrame:
-    """Full Strategy-1 + SVO pipeline through D1 and R9 (validation is a
-    separate operator — operators/validation.py). The fast path in
-    plans/pipeline.py validates BEFORE attaching sentences/metadata so the
-    string joins touch only surviving rows; output is identical because
-    validation neither reads nor filters on sentence/date/amount."""
-    deduped = dedup_relationships(candidate_relationships(kernel_rows))
-    return attach_sentence_and_metadata(deduped, kernel_rows, sentence_metadata)

@@ -152,16 +152,3 @@ EDGES = T.StructType(
         T.StructField("session_id", T.StringType(), True),
     ]
 )
-
-# Checkpoint/resume lineage manifest (FIXTURES.md §4, north_rule).
-LINEAGE = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("input_rows", T.LongType(), True),
-        T.StructField("output_rows", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("status", T.StringType(), False),
-    ]
-)

@@ -58,7 +58,3 @@ def join_plan_exchanges(spark: SparkSession, left: str, right: str, key: str) ->
         return plan.count("Exchange")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -20,6 +20,7 @@ a natural micro-batch. Two streaming translations:
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -34,6 +35,7 @@ from ..rules import MAX_TEXT_LENGTH
 from ..plans.pipeline import run_pipeline
 from ..schema import KERNEL_ROWS, TRANSCRIPTS
 from ..sources.fsio import io_for
+from ..sources.graph_store import BatchLedger, GraphStore
 
 
 def _reset_stale_partials(io, store_root: str, lineage: str, subdirs: tuple) -> None:
@@ -61,6 +63,37 @@ def _reset_stale_partials(io, store_root: str, lineage: str, subdirs: tuple) -> 
         return
     for sub in subdirs:
         io.rmtree(f"{store_root}/{sub}")
+
+
+def _lineage_ledger(io, store_root: str, checkpoint_dir: str, partials: tuple = ()) -> BatchLedger:
+    """The applied-batch ledger of ``checkpoint_dir``'s lineage. Batch
+    ids restart at 0 in a NEW checkpoint, so the ledger is namespaced per
+    lineage: skipping "batch 0" of a new stream because an old stream
+    applied its own batch 0 would lose data. ``partials`` are the per-batch
+    data subdirs a new lineage clears first (``_reset_stale_partials``)."""
+    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
+    _reset_stale_partials(io, store_root, lineage, partials)
+    return BatchLedger(f"{store_root}/_applied_batches/{lineage}", io=io)
+
+
+def _batch_dirs(io, root: str, exclude: int | None = None) -> list[str]:
+    """The ``batch=N`` directories under ``root`` (none when ``root`` does
+    not exist yet), leaving out ``batch=<exclude>``."""
+    if not io.isdir(root):
+        return []
+    return [
+        f"{root}/{d}"
+        for d in io.listdir(root)
+        if d.startswith("batch=") and d != f"batch={exclude}"
+    ]
+
+
+def _start_foreach_batch(stream: DataFrame, process, checkpoint_dir: str, available_now: bool):
+    """Start ``stream`` with ``process`` as its foreachBatch sink."""
+    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_transcript_stream(spark: SparkSession, input_path: str, max_files: int = 16) -> DataFrame:
@@ -95,10 +128,7 @@ def stream_kg_foreachbatch(
         finally:
             res.kernel_rows.unpersist()
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, process, checkpoint_dir, available_now)
 
 
 def stream_kg_to_store(
@@ -117,20 +147,12 @@ def stream_kg_to_store(
     value-idempotent. Streaming analog of the reference's per-request
     save_graph_data transaction (graph_db.py:49-72). Superseded commit
     directories are vacuumed after every batch. Returns the query."""
-    from ..sources.graph_store import BatchLedger, GraphStore
-
-    import hashlib
-
     stream = read_transcript_stream(spark, input_path)
     store = GraphStore(spark, store_root)
-    # ledger namespaced per checkpoint lineage: batch ids restart at 0 in
-    # a NEW checkpoint, and skipping "batch 0" from a different stream
-    # because an old stream applied its own batch 0 would lose data
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
     # no stale-partials reset here: the GraphStore MERGE is cumulative
     # across lineages BY DESIGN (a new stream continues the same graph);
     # the ledger only guards batch-id replay within one lineage
-    ledger = BatchLedger(f"{store_root}/_applied_batches/{lineage}", io=store.io)
+    ledger = _lineage_ledger(store.io, store_root, checkpoint_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if ledger.applied(batch_id):
@@ -149,10 +171,7 @@ def stream_kg_to_store(
         store.vacuum("nodes")
         store.vacuum("edges")
 
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, process, checkpoint_dir, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -435,25 +454,20 @@ def stream_neardup_minhash(
     an object-store deployment can alternatively keep the batch index in
     a manifest — the GraphStore manifest protocol is the pattern to reuse.
     """
-    import hashlib
-
     from ..operators.dedup import (
         band_keys,
         jaccard_verify,
         minhash_signatures,
         word_shingles,
     )
-    from ..sources.graph_store import BatchLedger
 
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(input_path)
     )
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
     io = io_for(store_root, spark)
-    _reset_stale_partials(io, store_root, lineage, ("docs", "sigs", "pairs"))
-    ledger = BatchLedger(f"{store_root}/_applied_batches/{lineage}", io=io)
+    ledger = _lineage_ledger(io, store_root, checkpoint_dir, ("docs", "sigs", "pairs"))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if ledger.applied(batch_id):
@@ -467,18 +481,8 @@ def stream_neardup_minhash(
         # accumulated signatures INCLUDING this batch (so new-new pairs
         # form). Explicit schemas on every store read: a batch with zero
         # output rows leaves a directory whose schema can't be inferred.
-        def _batch_dirs(sub: str, exclude: int | None = None) -> list[str]:
-            root = f"{store_root}/{sub}"
-            if not io.isdir(root):
-                return []
-            return [
-                f"{root}/{d}"
-                for d in io.listdir(root)
-                if d.startswith("batch=") and d != f"batch={exclude}"
-            ]
-
         all_sigs = spark.read.schema("doc_id bigint, sig array<bigint>").parquet(
-            *_batch_dirs("sigs")
+            *_batch_dirs(io, f"{store_root}/sigs")
         )
         all_bands = band_keys(all_sigs.select("doc_id", "sig"), n_bands)
         # the hot-bucket guard, same shape as the batch path: count first,
@@ -504,7 +508,7 @@ def stream_neardup_minhash(
         # y is always new, so only re-delivered doc_ids could resurface an
         # old pair; an anti-join against the pair store keeps emission
         # exactly-once per pair even then
-        prior_dirs = _batch_dirs("pairs", exclude=batch_id)
+        prior_dirs = _batch_dirs(io, f"{store_root}/pairs", exclude=batch_id)
         if prior_dirs:
             prior = spark.read.schema("a bigint, b bigint, jaccard double").parquet(
                 *prior_dirs
@@ -516,7 +520,7 @@ def stream_neardup_minhash(
             pairs.select(F.col("b").alias("doc_id"))
         ).distinct()
         corpus = spark.read.schema("doc_id bigint, text string").parquet(
-            *_batch_dirs("docs")
+            *_batch_dirs(io, f"{store_root}/docs")
         )
         needed = corpus.join(members, "doc_id", "semi").select("doc_id", "text")
         sh_needed = word_shingles(needed, "doc_id", "text", k)
@@ -524,12 +528,7 @@ def stream_neardup_minhash(
         verified.write.mode("overwrite").parquet(f"{store_root}/pairs/batch={batch_id}")
         ledger.mark(batch_id)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, process, checkpoint_dir, available_now)
 
 
 def stream_dsir(
@@ -570,20 +569,15 @@ def stream_dsir(
     batch oracle). Store layout matches ``stream_neardup_minhash`` (per-
     batch directories, overwrite-idempotent, driver-listable filesystem).
     """
-    import hashlib
-
     from ..operators.curation import dsir_features
-    from ..sources.graph_store import BatchLedger
 
     stream = (
         spark.readStream.schema("doc_id bigint, text string, lang string")
         .option("maxFilesPerTrigger", 1)
         .parquet(input_path)
     )
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
     io = io_for(store_root, spark)
-    _reset_stale_partials(io, store_root, lineage, ("doc_buckets", "dist"))
-    ledger = BatchLedger(f"{store_root}/_applied_batches/{lineage}", io=io)
+    ledger = _lineage_ledger(io, store_root, checkpoint_dir, ("doc_buckets", "dist"))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if ledger.applied(batch_id):
@@ -609,12 +603,7 @@ def stream_dsir(
         dist.write.mode("overwrite").parquet(f"{store_root}/dist/batch={batch_id}")
         ledger.mark(batch_id)
 
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, process, checkpoint_dir, available_now)
 
 
 def read_dsir_weights(
@@ -626,14 +615,8 @@ def read_dsir_weights(
     from ..operators.curation import dsir_score
 
     io = io_for(store_root, spark)
-
-    def _dirs(sub: str) -> list[str]:
-        root = f"{store_root}/{sub}"
-        if not io.isdir(root):
-            return []
-        return [f"{root}/{d}" for d in io.listdir(root) if d.startswith("batch=")]
-
-    doc_dirs, dist_dirs = _dirs("doc_buckets"), _dirs("dist")
+    doc_dirs = _batch_dirs(io, f"{store_root}/doc_buckets")
+    dist_dirs = _batch_dirs(io, f"{store_root}/dist")
     if not doc_dirs or not dist_dirs:
         return spark.createDataFrame([], "doc_id bigint, n_feats int, log_weight double")
     per_doc = spark.read.schema("doc_id bigint, bucket bigint, cnt bigint").parquet(
@@ -650,13 +633,7 @@ def read_dsir_weights(
 
 def read_neardup_pairs(spark: SparkSession, store_root: str) -> DataFrame:
     """All verified near-dup pairs the stream has emitted so far."""
-    io = io_for(store_root, spark)
-    root = f"{store_root}/pairs"
-    dirs = (
-        [f"{root}/{d}" for d in io.listdir(root) if d.startswith("batch=")]
-        if io.isdir(root)
-        else []
-    )
+    dirs = _batch_dirs(io_for(store_root, spark), f"{store_root}/pairs")
     schema = "a bigint, b bigint, jaccard double"
     if not dirs:
         return spark.createDataFrame([], schema)
