@@ -1500,7 +1500,8 @@ def _q_kg_triples_bucketed(spark, sf_dir):
     # the zero-shuffle input layout (SCALE.md §1): the golden corpus is
     # landed as a conv_id-BUCKETED catalog table (turn order shuffled
     # first, so co-location provably comes from the bucketed write) and
-    # the kernel runs with assume_clustered=True — no Exchange in the
+    # the kernel reads it at kernel_partitions = the bucket count, so
+    # Spark drops the extraction repartition — no Exchange in the
     # extraction plan (pinned by test). Output is identical to the
     # shuffling path by construction, so it shares the kg_triples oracle
     # (the hand-derived GOLDEN_EXPECTED_TRIPLES literal).
@@ -1525,8 +1526,8 @@ def _q_kg_triples_bucketed(spark, sf_dir):
     res = run_pipeline(
         spark,
         spark.table("kgb_oracle_db.golden_bucketed"),
+        kernel_partitions=4,
         persist=False,
-        assume_clustered=True,
     )
     return res.triples.select(
         F.col("document_id"), F.col("source"), F.col("type"), F.col("target")

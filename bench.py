@@ -426,10 +426,11 @@ def main() -> None:
     )
 
     # headline 2b: the SCALE.md §1 input layout — the same pipeline over a
-    # conv_id-BUCKETED catalog table with assume_clustered=True, which
-    # eliminates the extraction repartition (zero-Exchange kernel; pinned
-    # by test). The bucketed write is the one-time layout cost and is not
-    # timed; the delta vs kg_pipeline is what bucketing buys every run.
+    # conv_id-BUCKETED catalog table read at kernel_partitions = its
+    # bucket count, so Spark eliminates the extraction repartition
+    # (zero-Exchange kernel; pinned by test). The bucketed write is the
+    # one-time layout cost and is not timed; the delta vs kg_pipeline is
+    # what bucketing buys every run.
     from knowledge_graph_builder_spark.sources.transcripts import (
         write_transcripts_bucketed,
     )
@@ -445,10 +446,10 @@ def main() -> None:
         shutil.rmtree("/tmp/kgb_bench_wh/transcripts", ignore_errors=True)
         write_transcripts_bucketed(transcripts, "kgb_bench_db.transcripts", buckets=kern_parts)
         bucketed = spark.table("kgb_bench_db.transcripts")
-        run_pipeline(spark, bucketed, persist=False, assume_clustered=True).triples.count()
+        run_pipeline(spark, bucketed, kernel_partitions=kern_parts, persist=False).triples.count()
         timed(
             "kg_pipeline_bucketed",
-            lambda: run_pipeline(spark, bucketed, persist=False, assume_clustered=True).triples.count(),
+            lambda: run_pipeline(spark, bucketed, kernel_partitions=kern_parts, persist=False).triples.count(),
         )
 
     guarded("kg_pipeline_bucketed", _bucketed_section)

@@ -15,8 +15,8 @@ Scale notes (10^12 turns):
   (reference nlp_engine.py:20), so a single group's state is capped.
 * The guard alone still SHIPS every turn of a pathological conversation
   to one task; ``precap_transcripts`` (below) drops provably-dead turns
-  before the shuffle via bucket-salted char sums
-  (``run_pipeline(precap=True)``).
+  before the shuffle via bucket-salted char sums; callers apply it to the
+  transcripts they hand to ``run_pipeline``.
 * For the fused scale path that avoids materializing documents at all,
   see operators/extraction.py::extract_from_transcripts (repartition +
   sortWithinPartitions + one mapInArrow pass).

@@ -15,6 +15,8 @@ Two entry points share one kernel (``_make_fused_kernel``):
   streaming mapInArrow that assembles each conversation from its ordered
   turns and parses it without ever materializing a documents table. At
   10^12 turns this halves the shuffled bytes vs assemble-then-extract.
+  A table bucketed on conv_id and read with ``partitions`` equal to its
+  bucket count needs no shuffle at all: Spark drops the repartition.
 
 Per-row Python is never used; the kernel reads and writes Arrow batches.
 """
@@ -205,53 +207,48 @@ def extract_from_transcripts(
     transcripts: DataFrame,
     partitions: int | None = None,
     emit: frozenset = EMIT_ALL,
-    assume_clustered: bool = False,
 ) -> DataFrame:
-    """Fused assembly+extraction: transcripts -> kernel rows, one shuffle.
+    """Fused assembly+extraction: transcripts -> kernel rows, at most one
+    shuffle.
 
-    ``assume_clustered=True`` drops the pipeline's ONE wide operation:
-    when every conversation's turns are already co-located in a single
-    input partition — a table written with
-    ``write_transcripts_bucketed`` (Spark reads each bucket as exactly
-    one partition) or an Iceberg table bucketed on conv_id — the
-    repartition is pure waste, and the kernel runs SHUFFLE-FREE on the
-    scan partitions (only the per-partition sort remains; pinned by a
-    no-Exchange plan assertion in tests). At the SCALE.md design point
-    that removes the 100 TB shuffle entirely. The caller owns the
-    precondition: turns of one conv_id split across partitions would
-    silently produce duplicate partial documents."""
+    The repartition on conv_id is the pipeline's ONE wide operation, and
+    Spark drops it by itself when the input is already hash-bucketed on
+    conv_id into the same number of partitions: a table written with
+    ``write_transcripts_bucketed`` and read with ``partitions`` equal to
+    its bucket count (or with ``partitions=None`` and
+    ``spark.sql.shuffle.partitions`` equal to it) runs the kernel
+    SHUFFLE-FREE on the scan partitions (only the per-partition sort
+    remains; pinned by a no-Exchange plan assertion in tests). At the
+    SCALE.md design point that removes the 100 TB shuffle. Any other
+    layout keeps its Exchange, so the output never depends on how the
+    input happens to be partitioned."""
+    # Once the planner drops the Exchange, Spark 4's
+    # DisableUnnecessaryBucketedScan may still demote the bucketed scan to
+    # size-based file splits — correct plans on tiny files, conversations
+    # split across partitions (duplicate partial documents) once files are
+    # big enough to split. The flag is consulted at PLANNING time, so a
+    # set/restore around this (lazy) builder would be a no-op; it must
+    # stay off until the caller's action runs. get_spark sessions already
+    # pin it off; for sessions built elsewhere we pin it here and say so
+    # out loud rather than silently reconfiguring the caller's planner.
+    conf = transcripts.sparkSession.conf
+    flag = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    if conf.get(flag, "true") != "false":
+        warnings.warn(
+            f"extract_from_transcripts set {flag}=false for this SparkSession "
+            "(session-global): bucketed-scan demotion would split conversations "
+            "across partitions and corrupt results. Build sessions with "
+            "knowledge_graph_builder_spark.session.get_spark to pre-pin it.",
+            stacklevel=2,
+        )
+        conf.set(flag, "false")
     # malformed-row contract (shared with assemble_conversations): a NULL
     # conv_id has no document to belong to -> dropped; a NULL turn_idx
     # sorts first deterministically as -1
     t = transcripts.selectExpr(
         "conv_id", "text", "coalesce(turn_idx, -1) AS turn_idx"
     ).filter("conv_id IS NOT NULL")
-    if not assume_clustered:
-        t = t.repartition(partitions, t["conv_id"]) if partitions else t.repartition(t["conv_id"])
-    else:
-        # assume_clustered consumes bucket co-location as a DATA-LAYOUT
-        # precondition the planner cannot see, so Spark 4's
-        # DisableUnnecessaryBucketedScan would happily demote the bucketed
-        # scan to size-based file splits (no operator "requires" the
-        # distribution) — correct plans on tiny files, silent duplicate
-        # partial documents once files are big enough to split. The flag
-        # is consulted at PLANNING time, so a set/restore around this
-        # (lazy) builder would be a no-op; it must stay off until the
-        # caller's action runs. get_spark sessions already pin it off; for
-        # sessions built elsewhere we pin it here and say so out loud
-        # rather than silently reconfiguring the caller's planner.
-        conf = transcripts.sparkSession.conf
-        flag = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        if conf.get(flag, "true") != "false":
-            warnings.warn(
-                f"extract_from_transcripts(assume_clustered=True) set {flag}=false "
-                "for this SparkSession (session-global): bucketed-scan demotion "
-                "would split conversations across partitions and corrupt results. "
-                "Build sessions with knowledge_graph_builder_spark.session.get_spark "
-                "to pre-pin it.",
-                stacklevel=2,
-            )
-            conf.set(flag, "false")
+    t = t.repartition(partitions, t["conv_id"]) if partitions else t.repartition(t["conv_id"])
     # text breaks turn_idx ties, as in assemble_conversations; t[name] is
     # one py4j call where a bare name costs a dozen
     t = t.sortWithinPartitions(t["conv_id"], t["turn_idx"], t["text"])

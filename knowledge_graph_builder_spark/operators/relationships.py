@@ -52,11 +52,6 @@ from ..rules import (
     VERB_TO_RELATIONSHIP,
 )
 
-_CANDIDATE_COLS = [
-    "conv_id", "sent_idx", "source", "target", "type", "reason",
-    "confidence", "verb", "strat_group", "rule_pri", "ord_a", "ord_b", "attach_metadata",
-]
-
 # (flag column name, phrases) — a flag is true when any phrase occurs in
 # the lowered sentence. Phrase sets lifted from relationship_logic.py
 # R2:329-355, R3:360-389, R4:393-408, R5:410-426.
@@ -108,9 +103,8 @@ def sentence_texts(kernel_rows: DataFrame) -> DataFrame:
 
 def candidates_from_kernel(kernel_rows: DataFrame) -> DataFrame:
     """The kernel's sentence-local rule candidates, projected onto the
-    same shape candidate_relationships() produces. This is the zero-extra-
-    shuffle fast path used by plans/pipeline.py; a parity test pins it to
-    the relational path's output."""
+    same shape candidate_relationships() produces, so tests can pin the
+    kernel's candidates to the relational path's output."""
     return kernel_rows.filter(F.col("kind") == "cand").select(
         "conv_id",
         "sent_idx",

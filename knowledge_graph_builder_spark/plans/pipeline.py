@@ -201,14 +201,14 @@ def run_pipeline(
     fused: bool = True,
     kernel_partitions: int | None = None,
     persist: bool = True,
-    precap: bool = False,
-    assume_clustered: bool = False,
 ) -> PipelineResult:
     """Transcripts -> full knowledge graph.
 
     ``fused=True`` (the scale path): ONE shuffle clusters turns by
-    conv_id; the Arrow kernel assembles each conversation and emits the
-    FINISHED per-document entities/triples/events (every reference
+    conv_id (none for a table bucketed on conv_id into
+    ``kernel_partitions`` buckets); the Arrow kernel assembles each
+    conversation and emits the FINISHED per-document
+    entities/triples/events (every reference
     pipeline stage except the graph MERGE is document-local — SURVEY.md
     §3.1). Downstream there are no joins or windows until the genuinely
     global graph dedup (D3/D4) and canonicalization.
@@ -225,18 +225,11 @@ def run_pipeline(
     held so branches don't re-run the kernel. With a checkpoint_dir the
     parquet stage IS the materialization.
     """
-    if precap:
-        # skew pre-cap: drop turns that provably cannot contribute to the
-        # capped document BEFORE the conv_id shuffle (assembly.py docstring)
-        from ..operators.assembly import precap_transcripts
-
-        transcripts = precap_transcripts(transcripts)
-
     # only resume reads the fingerprint, and building it costs py4j round
     # trips (and an aggregate job for in-memory input)
     fp = ""
     if checkpoint_dir:
-        options = f"|fused={fused}|parts={kernel_partitions}|clustered={assume_clustered}"
+        options = f"|fused={fused}|parts={kernel_partitions}"
         fp = _input_fingerprint(transcripts, options)
     ckpt = Checkpointer(checkpoint_dir, run_id, spark, fingerprint=fp)
 
@@ -251,12 +244,7 @@ def run_pipeline(
         kernel_rows = _hold(
             ckpt.stage(
                 "kernel_rows",
-                lambda: extract_from_transcripts(
-                    transcripts,
-                    kernel_partitions,
-                    emit=EMIT_GRAPH,
-                    assume_clustered=assume_clustered,
-                ),
+                lambda: extract_from_transcripts(transcripts, kernel_partitions, emit=EMIT_GRAPH),
             )
         )
         entities = ckpt.stage("entities", lambda: entities_from_kernel(kernel_rows))

@@ -69,16 +69,17 @@ def get_spark(
     if preset is None and _workers_import_package():
         defaults.update(WORKER_DAEMON)
     conf = {k: v for k, v in defaults.items() if k not in (preset or ())}
-    # The zero-shuffle pipeline (extract_from_transcripts
-    # assume_clustered=True) depends on Spark honoring the bucketed
-    # layout of the transcripts table. Spark 4.x's
-    # DisableUnnecessaryBucketedScan rule demotes a bucketed scan when
-    # no downstream operator *requires* the distribution — which is
-    # exactly our case, because the kernel consumes co-location as a
-    # data-layout precondition invisible to the planner. A demoted scan
-    # re-splits files by size and silently breaks conversation
-    # co-location at production file sizes, so the optimization must
-    # stay off for every session that reads bucketed transcripts.
+    # The zero-shuffle pipeline (a conv_id-bucketed transcripts table
+    # read at as many kernel partitions as buckets, so Spark drops the
+    # extraction repartition) depends on Spark honoring the bucketed
+    # layout. Once the Exchange is gone, Spark 4.x's
+    # DisableUnnecessaryBucketedScan rule demotes the bucketed scan
+    # because no remaining operator *requires* the distribution: the
+    # kernel consumes co-location as a data-layout precondition
+    # invisible to the planner. A demoted scan re-splits files by size
+    # and silently breaks conversation co-location at production file
+    # sizes, so the optimization stays off; extract_from_transcripts
+    # pins it in sessions built elsewhere.
     conf["spark.sql.sources.bucketing.autoBucketedScan.enabled"] = "false"
     if master:
         conf["spark.master"] = master

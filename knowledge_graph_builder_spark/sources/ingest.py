@@ -17,7 +17,7 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,12 +39,6 @@ def _fake_pdf_text(payload: bytes) -> str:
         return ""
     runs = [m.group(0).decode("ascii") for m in _PRINTABLE_RUN.finditer(payload)]
     return "\n".join(runs).strip()
-
-
-def read_binary_documents(spark: SparkSession, path: str, glob: str = "*.pdf") -> DataFrame:
-    """binaryFile scan — content rides in its own column so metadata-only
-    queries never read the bytes."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
 
 def _pypdf_text(payload: bytes) -> str:

@@ -50,25 +50,18 @@ def read_transcripts(spark: SparkSession, source: str, fmt: str | None = None) -
     return reader.parquet(source)
 
 
-def write_transcripts(df: DataFrame, path: str, buckets: int = 0) -> None:
-    """Write transcripts partition-friendly: clustered by conv_id so the
-    assembly shuffle is cheap (and prunable when bucketing is available)."""
-    writer = df.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx").write.mode("overwrite")
-    writer.parquet(path)
-
-
 def write_transcripts_bucketed(df: DataFrame, table: str, buckets: int = 64) -> None:
     """Land the transcripts table HASH-BUCKETED by conv_id (Spark SQL
-    bucketing via saveAsTable; the Iceberg equivalent is
-    ``PARTITIONED BY (bucket(N, conv_id))``).
+    bucketing via saveAsTable).
 
     This is the SCALE.md §1 input layout: a bucketed read materializes
     each bucket as exactly ONE partition with every conversation's turns
-    co-located, so the extraction kernel can run with
-    ``assume_clustered=True`` — zero shuffles end to end (the write pays
+    co-located. Read it with ``partitions`` (``run_pipeline``'s
+    ``kernel_partitions``) equal to ``buckets`` and Spark drops the
+    extraction repartition — zero shuffles end to end (the write pays
     the clustering cost once; every subsequent extraction run over the
-    table skips it). Size ``buckets`` to ~3 GB of input each (2^15 at
-    100 TB)."""
+    table skips it). Any other partition count shuffles as usual. Size
+    ``buckets`` to ~3 GB of input each (2^15 at 100 TB)."""
     (
         df.write.mode("overwrite")
         .bucketBy(buckets, "conv_id")

@@ -925,13 +925,10 @@ class DocumentAnalysis:
     graph: DocumentGraph
 
 
-def build_document_graph(text: str, max_length: int = 2_000_000) -> DocumentGraph:
-    """One document -> final (entities, validated triples, events), the
-    per-document slice of the whole reference pipeline (main.py:75-80)."""
-    return analyze_document(text, max_length).graph
-
-
 def analyze_document(text: str, max_length: int = 2_000_000) -> DocumentAnalysis:
+    """One document -> its parse artifacts and final (entities, validated
+    triples, events): the per-document slice of the whole reference
+    pipeline (main.py:75-80) and the Arrow kernel's single entry point."""
     cleaned = clean_text(text)[:max_length]
     sentences = split_sentences(cleaned)
 
@@ -1096,27 +1093,3 @@ def _event_name(event_type: str, participants: list[str]) -> str:
         return f"{p0} funding round"
     return " - ".join(participants[:2])
 
-
-# ---------------------------------------------------------------------------
-# Per-document parse — the single entry point used by the Arrow kernel
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class ParsedDocument:
-    sentences: list[tuple[str, int]]            # (text, doc offset)
-    mentions: list[tuple[int, Mention]]         # (sent_idx, mention), doc order
-    svos: list[tuple[int, SvoCandidate]]        # (sent_idx, candidate)
-
-
-def parse_document(text: str, max_length: int = 2_000_000) -> ParsedDocument:
-    cleaned = clean_text(text)[:max_length]
-    sentences = split_sentences(cleaned)
-    mentions: list[tuple[int, Mention]] = []
-    svos: list[tuple[int, SvoCandidate]] = []
-    for sent_idx, (sent, start) in enumerate(sentences):
-        toks = _tokenize(sent)
-        sent_mentions = detect_mentions(sent, start, toks)
-        mentions.extend((sent_idx, m) for m in sent_mentions)
-        svos.extend((sent_idx, s) for s in extract_svo(sent, sent_mentions, start, toks))
-    return ParsedDocument(sentences, mentions, svos)

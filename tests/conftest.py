@@ -15,7 +15,8 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # mirror session.get_spark: bucketed scans must not be demoted
-        # (assume_clustered correctness depends on one-partition-per-bucket)
+        # (the shuffle-free kernel over a bucketed table depends on
+        # one-partition-per-bucket)
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.ui.enabled", "false")
         # Python workers fork from the package's daemon, as under get_spark

@@ -1,18 +1,24 @@
 """The pure-Catalyst expression forms of P2/P3/R1 (corrected_type_col,
-normalized_name_col, role_relationship_col) are the documented column-level
-operator surface; the pipeline itself computes these in the kernel. This
-parity suite keeps the expression forms honest against the kernel
-implementations so neither can drift."""
+normalized_name_col, role_relationship_from_positions) are the documented
+column-level operator surface; the fused pipeline computes these in the
+kernel. This parity suite keeps the expression forms honest against the
+kernel implementations so neither can drift."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from knowledge_graph_builder_spark import textkit
-from knowledge_graph_builder_spark.functions.indicators import role_relationship_col
 from knowledge_graph_builder_spark.operators.extraction import (
     corrected_type_col,
     normalized_name_col,
+)
+from knowledge_graph_builder_spark.operators.relationships import (
+    role_relationship_from_positions,
+)
+from knowledge_graph_builder_spark.rules import (
+    ROLE_INDICATOR_MAX_DISTANCE,
+    ROLE_INDICATOR_PAIRS,
 )
 
 _NAMES = [
@@ -53,17 +59,16 @@ _R1_CASES = [
 
 def test_r1_expression_parity(spark):
     df = spark.createDataFrame(_R1_CASES, ["sl", "p", "o"])
+    sl = F.col("sl")
+    # indicator positions as sentence_features builds them
+    ind_pos = F.array(*[F.instr(sl, ind) - 1 for _, ind in ROLE_INDICATOR_PAIRS])
     out = df.select(
         "sl", "p", "o",
-        role_relationship_col(
-            F.col("sl"),
-            F.instr(F.col("sl"), F.col("p")) - 1,
-            F.instr(F.col("sl"), F.col("o")) - 1,
+        role_relationship_from_positions(
+            ind_pos,
+            F.instr(sl, F.col("p")) - 1,
+            F.instr(sl, F.col("o")) - 1,
         ).alias("rel"),
-    )
-    from knowledge_graph_builder_spark.rules import (
-        ROLE_INDICATOR_MAX_DISTANCE,
-        ROLE_INDICATOR_PAIRS,
     )
 
     def py_r1(sl, p, o):

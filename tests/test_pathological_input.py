@@ -150,6 +150,6 @@ def test_precap_byte_parity_and_reduction(spark):
     # pipeline-level parity at the real cap (nothing dropped here, plan
     # differs only by the pre-cap stages)
     base = run_pipeline(spark, tr, persist=False).triples.collect()
-    pre = run_pipeline(spark, tr, persist=False, precap=True).triples.collect()
+    pre = run_pipeline(spark, precap_transcripts(tr), persist=False).triples.collect()
     key = lambda r: (r["document_id"], r["source"], r["type"], r["target"], r["reason"])
     assert sorted(map(key, base)) == sorted(map(key, pre))

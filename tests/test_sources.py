@@ -5,6 +5,8 @@ nothing; new files process exactly once)."""
 
 from __future__ import annotations
 
+import pytest
+
 from knowledge_graph_builder_spark.plans.pipeline import run_pipeline
 from knowledge_graph_builder_spark.sources.synth import golden_transcripts
 from knowledge_graph_builder_spark.sources.transcripts import read_transcripts
@@ -137,31 +139,57 @@ def test_bucketed_join_eliminates_exchange(spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
 
 
+def _formatted_plan(df) -> str:
+    """explain("formatted"): the only rendering that shows the bucketed-
+    scan decision ('Bucketed: true' vs '... disabled by query planner')."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def _kernel_triples(kernel_rows):
+    """Triple rows as a multiset: a conversation split across partitions
+    repeats triples rather than inventing new ones."""
+    from collections import Counter
+
+    return Counter(
+        (r.conv_id, r.text, r.label, r.obj, r.reason)
+        for r in kernel_rows.filter(kernel_rows.kind == "triple").collect()
+    )
+
+
 def test_bucketed_transcripts_run_kernel_shuffle_free(spark, tmp_path):
-    """SCALE.md §1 input layout, now executable: transcripts landed via
-    write_transcripts_bucketed read back as one-partition-per-bucket with
-    conversations co-located, so extract_from_transcripts(
-    assume_clustered=True) plans ZERO Exchange operators — the pipeline's
-    only wide operation eliminated — while producing the identical triple
-    set to the shuffling path."""
+    """SCALE.md §1 input layout: transcripts landed via
+    write_transcripts_bucketed and read at as many partitions as buckets
+    plan ZERO Exchange operators — Spark drops the kernel's repartition on
+    its own, no caller switch — while producing the identical triple set
+    to the unbucketed input, whose plan keeps its one Exchange."""
+    import inspect
+
     from knowledge_graph_builder_spark.operators.extraction import (
         EMIT_GRAPH,
         extract_from_transcripts,
     )
-    from knowledge_graph_builder_spark.sources.synth import golden_transcripts
     from knowledge_graph_builder_spark.sources.transcripts import (
         write_transcripts_bucketed,
     )
+
+    # no caller can promise a clustering the planner cannot see: the
+    # shuffle decision is Spark's alone, and the only layout knob is the
+    # partition count
+    assert list(inspect.signature(extract_from_transcripts).parameters) == [
+        "transcripts", "partitions", "emit",
+    ]
 
     spark.sql(f"CREATE DATABASE IF NOT EXISTS convdb LOCATION '{tmp_path}/wh'")
     try:
         # shuffled input order: co-location must come from the BUCKETED
         # WRITE, not from the synth source happening to be sorted
-        src = golden_transcripts(spark, shuffled=True).repartition(7)
-        write_transcripts_bucketed(src, "convdb.transcripts", buckets=4)
+        raw = golden_transcripts(spark, shuffled=True)
+        write_transcripts_bucketed(raw.repartition(7), "convdb.transcripts", buckets=4)
         bucketed = spark.table("convdb.transcripts")
 
-        fast = extract_from_transcripts(bucketed, emit=EMIT_GRAPH, assume_clustered=True)
+        # the tier-1 session runs 4 shuffle partitions = the bucket count
+        fast = extract_from_transcripts(bucketed, emit=EMIT_GRAPH)
         plan = fast._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:800]
         # no-Exchange alone cannot see a DEMOTED bucketed scan (Spark 4's
@@ -169,24 +197,56 @@ def test_bucketed_transcripts_run_kernel_shuffle_free(spark, tmp_path):
         # operator requires the distribution — at production file sizes
         # that breaks conversation co-location silently). Assert the scan
         # is ACTUALLY bucketed and reads one partition per bucket; the
-        # session factory pins autoBucketedScan.enabled=false to make it so.
-        fmt = fast._jdf.queryExecution().explainString(
-            fast.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        # session pins autoBucketedScan.enabled=false to make it so.
+        fmt = _formatted_plan(fast)
         assert "Bucketed: true" in fmt, fmt[:1200]
         assert "disabled by query planner" not in fmt, fmt[:1200]
         assert fast.rdd.getNumPartitions() == 4
 
-        def triples(df):
-            return {
-                (r.conv_id, r.text, r.label, r.reason)
-                for r in df.filter(df.kind == "triple").collect()
-            }
-
-        slow = extract_from_transcripts(bucketed, emit=EMIT_GRAPH)
-        assert triples(fast) == triples(slow)
-        assert len(triples(fast)) > 0
+        # control: the unbucketed source pays exactly one Exchange
+        control = extract_from_transcripts(raw, emit=EMIT_GRAPH)
+        cplan = control._jdf.queryExecution().executedPlan().toString()
+        assert cplan.count("Exchange ") == 1, cplan[:800]
+        assert _kernel_triples(fast) == _kernel_triples(control)
+        assert len(_kernel_triples(fast)) > 0
     finally:
         spark.sql("DROP DATABASE IF EXISTS convdb CASCADE")
+
+
+def test_bucketed_scan_guarded_without_session_pin(spark, tmp_path):
+    """A session that keeps Spark's default autoBucketedScan.enabled=true
+    and splits files small: once Spark drops the kernel's repartition it
+    would demote the bucketed scan to size-based splits, spreading each
+    conversation over several tasks (duplicate partial documents). The
+    guard pins the flag off, says so, and the output equals the
+    unbucketed source's."""
+    from knowledge_graph_builder_spark.operators.extraction import (
+        EMIT_GRAPH,
+        extract_from_transcripts,
+    )
+    from knowledge_graph_builder_spark.sources.synth import synth_transcripts
+    from knowledge_graph_builder_spark.sources.transcripts import (
+        write_transcripts_bucketed,
+    )
+
+    auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    split = "spark.sql.files.maxPartitionBytes"
+    saved = {k: spark.conf.get(k) for k in (auto, split)}
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS guarddb LOCATION '{tmp_path}/wh'")
+    try:
+        raw = synth_transcripts(spark, n_convs=60, seed=7)
+        reference = _kernel_triples(extract_from_transcripts(raw, emit=EMIT_GRAPH))
+        write_transcripts_bucketed(raw, "guarddb.transcripts", buckets=4)
+        spark.conf.set(auto, "true")
+        spark.conf.set(split, "1k")
+
+        with pytest.warns(UserWarning, match="autoBucketedScan"):
+            kr = extract_from_transcripts(spark.table("guarddb.transcripts"), emit=EMIT_GRAPH)
+        fmt = _formatted_plan(kr)
+        assert "Bucketed: true" in fmt, fmt[:1200]
+        assert "disabled by query planner" not in fmt, fmt[:1200]
+        assert _kernel_triples(kr) == reference
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        spark.sql("DROP DATABASE IF EXISTS guarddb CASCADE")

@@ -23,57 +23,57 @@ def test_sentence_offsets_are_document_level():
 
 
 def test_gazetteer_and_suffix_absorption():
-    pd = tk.parse_document("Apple Inc. is headquartered in Cupertino.")
-    labels = {(m.text, m.label) for _, m in pd.mentions}
+    an = tk.analyze_document("Apple Inc. is headquartered in Cupertino.")
+    labels = {(m.text, m.label) for _, m in an.mentions}
     assert ("Apple Inc.", "ORG") in labels
     assert ("Cupertino", "GPE") in labels
 
 
 def test_deliberate_gpe_mislabels_for_type_correction():
-    pd = tk.parse_document("Amazon competes with companies like Microsoft, Google, and Alibaba.")
-    by_text = {m.text: m.label for _, m in pd.mentions}
+    an = tk.analyze_document("Amazon competes with companies like Microsoft, Google, and Alibaba.")
+    by_text = {m.text: m.label for _, m in an.mentions}
     assert by_text["Amazon"] == "GPE"  # corrected to ORG downstream (P3)
     assert by_text["Alibaba"] == "GPE"
     assert by_text["Microsoft"] == "ORG"
 
 
 def test_ner_blindspots_for_force_detect():
-    pd = tk.parse_document("Amazon produces devices such as Kindle, Echo, and Fire TV.")
-    texts = {m.text for _, m in pd.mentions}
+    an = tk.analyze_document("Amazon produces devices such as Kindle, Echo, and Fire TV.")
+    texts = {m.text for _, m in an.mentions}
     assert "Echo" not in texts  # force-detect operator's job (nlp_engine.py:197-214)
     assert "Kindle" in texts and "Fire TV" in texts
 
 
 def test_metadata_classes():
-    pd = tk.parse_document("Microsoft raised $1 billion in Series B funding last year.")
-    by_label = {m.label: m.text for _, m in pd.mentions}
+    an = tk.analyze_document("Microsoft raised $1 billion in Series B funding last year.")
+    by_label = {m.label: m.text for _, m in an.mentions}
     assert by_label["MONEY"] == "$1 billion"
     assert by_label["DATE"] == "last year"
 
 
 def test_svo_includes_determiner_in_object():
-    pd = tk.parse_document("In 2007, Apple released the iPhone for $599.")
-    svos = [(s.subj, s.verb_lemma, s.obj) for _, s in pd.svos]
+    an = tk.analyze_document("In 2007, Apple released the iPhone for $599.")
+    svos = [(s.subj, s.verb_lemma, s.obj) for _, s in an.svos]
     assert ("Apple", "release", "the iPhone") in svos  # subtree-join quirk
 
 
 def test_svo_passive_by_object():
-    pd = tk.parse_document("Apple was founded in 1976 by Steve Jobs.")
-    svos = [(s.subj, s.verb_lemma, s.obj) for _, s in pd.svos]
+    an = tk.analyze_document("Apple was founded in 1976 by Steve Jobs.")
+    svos = [(s.subj, s.verb_lemma, s.obj) for _, s in an.svos]
     assert ("Apple", "found", "Steve Jobs") in svos
 
 
 def test_svo_unmapped_verb_still_anchors():
     # 'named' lemmatizes to 'name' (unmapped) -> downstream drops it; the
     # kernel must not fall through to a later verb.
-    pd = tk.parse_document("Tim Cook was named CEO of Apple in 2011.")
-    assert all(s.verb_lemma == "name" for _, s in pd.svos)
+    an = tk.analyze_document("Tim Cook was named CEO of Apple in 2011.")
+    assert all(s.verb_lemma == "name" for _, s in an.svos)
 
 
 def test_parse_is_deterministic():
     text = "Apple acquired Beats for $3 billion in 2014. Google launched Android in 2008."
-    a = tk.parse_document(text)
-    b = tk.parse_document(text)
+    a = tk.analyze_document(text)
+    b = tk.analyze_document(text)
     assert [(i, m.text, m.label, m.start) for i, m in a.mentions] == [
         (i, m.text, m.label, m.start) for i, m in b.mentions
     ]

@@ -52,7 +52,7 @@ def test_mention_offsets_index_cleaned_text(text):
 @settings(max_examples=150, deadline=None)
 @given(_TEXT)
 def test_document_graph_invariants(text):
-    g = textkit.build_document_graph(text)
+    g = textkit.analyze_document(text).graph
     names = {e.text for e in g.entities}
     keys = [(e.text.lower(), e.etype) for e in g.entities]
     assert len(keys) == len(set(keys)), "E2/P6 dedup violated"
