@@ -12,9 +12,10 @@ through tools/submit_job.py:
 
 Without spark-submit: ``python -m knowledge_graph_builder_spark ...``.
 
-Reads the transcripts table (Iceberg identifier via --table, else parquet
-path via --input), runs the fused single-shuffle pipeline, and writes the
-nodes/edges/triples/events tables partitioned for downstream MERGE. A
+Reads the transcripts table (a catalog table via --table, read with
+``spark.table``; else a path via --input), runs the fused single-shuffle
+pipeline, and writes the nodes/edges/triples/events tables partitioned
+for downstream MERGE. A
 batch run prints ONE JSON line to stdout: run_id, master, wall_sec, the
 row count of each written table (read back) and the stage lineage.
 """
@@ -30,7 +31,7 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="knowledge_graph_builder_spark")
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="transcripts parquet path")
-    src.add_argument("--table", help="transcripts Iceberg table identifier")
+    src.add_argument("--table", help="transcripts catalog table identifier")
     p.add_argument("--output", required=True, help="output directory for graph tables")
     p.add_argument("--checkpoint", default=None, help="stage checkpoint dir (resumable)")
     p.add_argument("--run-id", default="run-0")
@@ -49,7 +50,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.streaming:
         if not args.input:
-            p.error("--streaming requires --input (a parquet path; table streams need an Iceberg catalog)")
+            p.error("--streaming requires --input (a parquet path)")
         if args.store_root:
             from .streaming.incremental import stream_kg_to_store
 
@@ -71,7 +72,10 @@ def main(argv: list[str] | None = None) -> int:
     from .sources.transcripts import read_transcripts
 
     t0 = time.monotonic()
-    transcripts = read_transcripts(spark, args.table or args.input, fmt=args.format)
+    if args.table:
+        transcripts = spark.table(args.table)
+    else:
+        transcripts = read_transcripts(spark, args.input, fmt=args.format)
     res = run_pipeline(
         spark,
         transcripts,

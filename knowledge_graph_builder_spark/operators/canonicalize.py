@@ -10,11 +10,12 @@ Pipeline:
    * MinHash-LSH: character 3-gram shingles -> k hash functions ->
      min-hash signature -> banded keys; names sharing a band bucket are
      candidates.
-2. candidate pairs = self-join within block, (a < b), deduped. Block size
-   is capped (drop blocks above `max_block`) — the guard against
-   quadratic blowup on stop-tokens at web scale. Hot keys are thereby
-   bounded, so no block's pair fan-out can skew a task; recall for names
-   sharing ONLY a hot token comes from the LSH bands instead.
+2. candidate pairs = self-join within block, (a < b), deduped
+   (``joins.block_pairs``). Block size is capped: ``joins.kept_blocks``
+   drops blocks above `max_block` — the guard against quadratic blowup
+   on stop-tokens at web scale. Hot keys are thereby bounded, so no
+   block's pair fan-out can skew a task; recall for names sharing ONLY a
+   hot token comes from the LSH bands instead.
 3. verification: Jaccard over token sets >= threshold.
 4. connected components over the verified pair graph — size-gated
    physical strategy: ONE ``limit(k+1).toArrow()`` fetch; if it holds at
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .joins import block_pairs
 
 N_MINHASH = 8
 LSH_BANDS = 4  # rows per band = N_MINHASH / LSH_BANDS
@@ -107,23 +110,9 @@ def candidate_pairs(
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """(a, b) verified alias-candidate pairs, a < b lexicographically."""
-    # Size-filter FIRST with a partial-aggregable count (hot stop-token
-    # blocks never materialize a member list the way a collect_set would),
-    # then self-join within surviving blocks — fan-out bounded by
-    # max_block, co-partitioned on block_key so the pair join is local.
     keys = blocking_keys(names, name_col).persist()
-    ok_blocks = (
-        keys.groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_block))
-        .select("block_key")
-    )
-    bounded = keys.join(ok_blocks, "block_key")
-
     pairs = (
-        bounded.select("block_key", F.col("name").alias("a"))
-        .join(bounded.select("block_key", F.col("name").alias("b")), "block_key")
-        .filter(F.col("a") < F.col("b"))
+        block_pairs(keys, "block_key", "name", max_block)
         # Jaccard-verify BEFORE the distinct: the filter is cheap column
         # math evaluated per block-collision, and it shrinks the distinct's
         # shuffle (a pair surviving k shared blocks shuffles k rows either
@@ -397,20 +386,10 @@ def canonicalize_incremental(
     touched = keys_new.select("block_key").distinct()
     keys_in_play = keys_new.unionByName(keys_old.join(touched, "block_key"))
 
-    ok_blocks = (
-        keys_in_play.groupBy("block_key")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_block))
-        .select("block_key")
-    )
-    bounded = keys_in_play.join(ok_blocks, "block_key")
-    new_bounded = keys_new.join(ok_blocks, "block_key")
     pairs = (
-        bounded.select("block_key", F.col("name").alias("x"))
-        .join(new_bounded.select("block_key", F.col("name").alias("y")), "block_key")
-        .filter(F.col("x") != F.col("y"))
-        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
+        block_pairs(keys_in_play, "block_key", "name", max_block, probe=keys_new)
         .filter(_token_jaccard("a", "b") >= jaccard_threshold)
+        .select("a", "b")
         .distinct()
         .localCheckpoint()
     )

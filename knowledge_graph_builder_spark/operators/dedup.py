@@ -12,14 +12,16 @@ Four families, all DataFrame-native (no per-row Python):
 
 At 100 TB the LSH band join is the scale path: cost is O(docs x bands)
 with bounded buckets, vs the quadratic naive pairwise. Buckets above
-`max_bucket` are dropped (boilerplate-text guard) and reported, never
-silently scanned.
+`max_bucket` are dropped before any pairing (boilerplate-text guard,
+``joins.kept_blocks``); nothing counts the dropped buckets yet.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .joins import block_pairs, kept_blocks
 
 
 def normalize_text_col(col):
@@ -173,24 +175,7 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """(a, b) candidate near-duplicate pairs from banded minhash buckets."""
     bands = band_keys(signatures, n_bands)
-    # Size-filter FIRST with a partial-aggregable count, THEN self-join
-    # within surviving buckets (the canonicalize.py candidate_pairs
-    # pattern): a degenerate bucket (empty/boilerplate docs) at 100 TB
-    # must never materialize an unbounded member array on one reducer.
-    ok_buckets = (
-        bands.groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("bucket")
-    )
-    bounded = bands.join(ok_buckets, "bucket")
-    return (
-        bounded.select("bucket", F.col("doc_id").alias("a"))
-        .join(bounded.select("bucket", F.col("doc_id").alias("b")), "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    return block_pairs(bands, "bucket", "doc_id", max_bucket).select("a", "b").distinct()
 
 
 def jaccard_verify(pairs: DataFrame, shingles: DataFrame, threshold: float = 0.7) -> DataFrame:
@@ -351,22 +336,17 @@ def semantic_duplicates(
 
     ``assigned``: (vec_id, cluster, v: array<double>) as produced by
     ``similarity.ivf_assign``. Clusters wider than ``max_cluster`` are
-    count-filtered BEFORE the self-join (the same hot-bucket guard as
-    ``lsh_candidate_pairs`` — a degenerate cluster of boilerplate
-    embeddings must not materialize a quadratic join); the cluster-size
-    frame is tiny (k rows) and broadcasts.
+    count-filtered BEFORE the self-join (``joins.kept_blocks`` — a
+    degenerate cluster of boilerplate embeddings must not materialize a
+    quadratic join); the kept-cluster frame is tiny (k rows) and
+    broadcasts. The pair join carries the vectors, so it pairs members
+    itself rather than through ``joins.block_pairs``.
 
     Returns (vec_id, cluster, dup_of, cosine) for DROPPED docs.
     """
     from .similarity import cosine_col
 
-    ok = (
-        assigned.groupBy("cluster")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_cluster))
-        .select("cluster")
-    )
-    members = assigned.join(F.broadcast(ok), "cluster")
+    members = assigned.join(F.broadcast(kept_blocks(assigned, "cluster", max_cluster)), "cluster")
     lhs = members.select("cluster", F.col("vec_id").alias("a"), F.col("v").alias("va"))
     rhs = members.select("cluster", F.col("vec_id").alias("b"), F.col("v").alias("vb"))
     pairs = (

@@ -1,8 +1,13 @@
-"""Temporal join operators: as-of join and gap-based sessionization.
+"""Join operators: block purging, as-of join, sessionization, snapshot diff.
 
-The reference has no temporal machinery (SURVEY.md §2.9); these are the
-engine-side additions a transcript/event corpus needs (latest state as of
-a timestamp; session segmentation of event streams).
+``kept_blocks``/``block_pairs`` hold the blocking policy every pair
+generator shares (canonicalization, MinHash-LSH, winnowing, SemDeDup):
+count each block, purge blocks above a size cap, pair members only
+inside the blocks that survive.
+
+The reference has no temporal machinery (SURVEY.md §2.9); the as-of join
+and sessionization are the engine-side additions a transcript/event
+corpus needs.
 
 ``asof_join`` uses the union+window formulation rather than the naive
 inequality join: tag both inputs, union them on (key, ts), and carry the
@@ -17,6 +22,50 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def kept_blocks(members: DataFrame, block: str, max_size: int) -> DataFrame:
+    """The block-purging policy: the ``block`` values that occur in 2 to
+    ``max_size`` rows of ``members``. One partial-aggregable count, so a
+    hot block costs one counter per map task, never a member list.
+    Singleton blocks pair nothing and go too."""
+    return (
+        members.groupBy(block)
+        .agg(F.count("*").alias("n"))
+        .filter((F.col("n") >= 2) & (F.col("n") <= max_size))
+        .select(block)
+    )
+
+
+def block_pairs(
+    members: DataFrame,
+    block: str,
+    member: str,
+    max_size: int,
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """(block, a, b): one row per pair per shared block of ``kept_blocks``
+    (sizes counted over ``members``).
+
+    Without ``probe``: pairs within ``members``, ``a < b``. With
+    ``probe`` (same columns, usually a subset of ``members``): each
+    member paired with each probe row of its block, ``a != b``, as
+    ``(least, greatest)``; a pair of two probe rows comes once per side.
+    """
+    kept = kept_blocks(members, block, max_size)
+    bounded = members.join(kept, block)
+    if probe is None:
+        return (
+            bounded.select(block, F.col(member).alias("a"))
+            .join(bounded.select(block, F.col(member).alias("b")), block)
+            .filter(F.col("a") < F.col("b"))
+        )
+    return (
+        bounded.select(block, F.col(member).alias("x"))
+        .join(probe.join(kept, block).select(block, F.col(member).alias("y")), block)
+        .filter(F.col("x") != F.col("y"))
+        .select(block, F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
+    )
 
 
 def asof_join(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import ngrams_col
+from .joins import block_pairs
 
 # Tiny per-language stopword marker sets for the n-gram/stopword heuristic.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -165,25 +166,14 @@ def shared_fingerprint_pairs(
     """(doc_id, fingerprint) -> (a, b, shared) pairs of documents sharing
     >= min_shared winnowed fingerprints.
 
-    Hot-bucket guard (same pattern as dedup.lsh_candidate_pairs and
-    canonicalize.candidate_pairs): a partial-aggregable COUNT filters
-    boilerplate fingerprints shared by > max_bucket documents BEFORE any
-    self-join — no bucket can materialize quadratic pairs or an unbounded
-    member list. Docs related only through a dropped boilerplate
-    fingerprint still pair through their remaining content fingerprints.
+    Hot-bucket guard (``joins.block_pairs``): boilerplate fingerprints
+    shared by > max_bucket documents are dropped BEFORE any self-join —
+    no bucket can materialize quadratic pairs or an unbounded member
+    list. Docs related only through a dropped boilerplate fingerprint
+    still pair through their remaining content fingerprints.
     """
-    ok = (
-        fingerprints.groupBy("fingerprint")
-        .agg(F.count("*").alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("fingerprint")
-    )
-    bounded = fingerprints.join(ok, "fingerprint")
-    a = bounded.select(F.col("doc_id").alias("a"), "fingerprint")
-    b = bounded.select(F.col("doc_id").alias("b"), "fingerprint")
     return (
-        a.join(b, "fingerprint")
-        .filter(F.col("a") < F.col("b"))
+        block_pairs(fingerprints, "fingerprint", "doc_id", max_bucket)
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
         .filter(F.col("shared") >= min_shared)

@@ -1,9 +1,10 @@
 """Transcript source (reference S1/S2 equivalent — SURVEY.md §2.1).
 
 The reference ingested one HTTP request body per document (main.py:64-75).
-Here the source is an Iceberg table of transcripts when an Iceberg catalog
-is configured, else a parquet directory with the identical layout; either
-way `conv_id` plays the reference's `document_id`.
+Here the source is a transcripts directory (parquet, JSON-lines or CSV)
+read by ``read_transcripts``, or a catalog table with the identical
+layout read by ``spark.table`` (the CLI's ``--table``); either way
+`conv_id` plays the reference's `document_id`.
 
 Filters and column selection applied downstream reach the scan (predicate
 pushdown / column pruning); partition pruning applies when the table is
@@ -18,24 +19,13 @@ from ..schema import TRANSCRIPTS
 
 
 def read_transcripts(spark: SparkSession, source: str, fmt: str | None = None) -> DataFrame:
-    """Read the transcripts table.
+    """Read the transcripts directory at path ``source``.
 
-    ``source`` may be an Iceberg table identifier (``catalog.db.table``,
-    used when the session has an Iceberg catalog) or a path; ``fmt``
-    selects ``parquet`` (default for paths), ``json`` (JSON-lines), or
-    ``csv`` (with header). All formats are schema-asserted — inference is
-    never used (SURVEY.md §1.3).
+    ``fmt`` selects ``parquet`` (the default), ``json`` (JSON-lines), or
+    ``csv`` (with header); a ``.json``/``.jsonl``/``.csv`` suffix implies
+    its format. All formats are schema-asserted — inference is never
+    used (SURVEY.md §1.3).
     """
-    if fmt is None and "/" not in source and "." in source:
-        try:
-            return spark.read.format("iceberg").load(source)
-        except Exception as exc:
-            # fall back ONLY when the Iceberg data source itself is
-            # absent; real table errors (permissions, corrupt metadata)
-            # must surface, not turn into a confusing parquet-path error
-            msg = str(exc)
-            if "DATA_SOURCE_NOT_FOUND" not in msg and "Failed to find" not in msg:
-                raise
     if fmt is None and source.rstrip("/").endswith((".jsonl", ".json")):
         fmt = "json"
     if fmt is None and source.rstrip("/").endswith(".csv"):

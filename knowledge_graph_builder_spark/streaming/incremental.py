@@ -31,6 +31,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.assembly import TURN_SEPARATOR
 from ..operators.extraction import EMIT_GRAPH, _rows_for_document, _KERNEL_COLS
+from ..operators.joins import block_pairs
 from ..rules import MAX_TEXT_LENGTH
 from ..plans.pipeline import run_pipeline
 from ..schema import KERNEL_ROWS, TRANSCRIPTS
@@ -485,23 +486,10 @@ def stream_neardup_minhash(
             *_batch_dirs(io, f"{store_root}/sigs")
         )
         all_bands = band_keys(all_sigs.select("doc_id", "sig"), n_bands)
-        # the hot-bucket guard, same shape as the batch path: count first,
-        # join only inside surviving buckets
-        ok = (
-            all_bands.groupBy("bucket")
-            .agg(F.count("*").alias("n"))
-            .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-            .select("bucket")
-        )
-        new_bands = band_keys(sigs_new, n_bands).join(ok, "bucket")
-        bounded_all = all_bands.join(ok, "bucket")
+        new_bands = band_keys(sigs_new, n_bands)
         pairs = (
-            bounded_all.select("bucket", F.col("doc_id").alias("x"))
-            .join(new_bands.select("bucket", F.col("doc_id").alias("y")), "bucket")
-            .filter(F.col("x") != F.col("y"))
-            .select(
-                F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-            )
+            block_pairs(all_bands, "bucket", "doc_id", max_bucket, probe=new_bands)
+            .select("a", "b")
             .distinct()
         )
         # drop pairs already emitted by an earlier batch (both members old):

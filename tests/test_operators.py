@@ -9,7 +9,12 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from knowledge_graph_builder_spark.operators.joins import asof_join, sessionize
+from knowledge_graph_builder_spark.operators.joins import (
+    asof_join,
+    block_pairs,
+    kept_blocks,
+    sessionize,
+)
 from knowledge_graph_builder_spark.operators.multimodal import (
     decode_and_featurize,
     sample_frames,
@@ -567,6 +572,55 @@ def test_sessionize_hand_case(spark):
     assert sessions[(1, 0)] == 0 and sessions[(1, 100)] == 0
     assert sessions[(1, 4000)] == 1 and sessions[(1, 4100)] == 1
     assert sessions[(2, 0)] == 0
+
+
+def _block_pairs_reference(rows, cap, probe=None):
+    """Plain-Python block purging: (block, a, b) rows as a Counter."""
+    from collections import Counter
+
+    sizes = Counter(b for b, _ in rows)
+    kept = {b for b, n in sizes.items() if 2 <= n <= cap}
+    out = Counter()
+    for b, x in rows:
+        for b2, y in rows if probe is None else probe:
+            if b in kept and b2 == b:
+                if probe is None and x < y:
+                    out[(b, x, y)] += 1
+                elif probe is not None and x != y:
+                    out[(b, min(x, y), max(x, y))] += 1
+    return kept, out
+
+
+@pytest.mark.parametrize("member_type", ["string", "bigint"])
+def test_block_pairs_match_python_reference(spark, member_type):
+    import random
+    from collections import Counter
+
+    cap = 4
+    rng = random.Random(29)
+    ids = [f"m{i:03d}" if member_type == "string" else i * 10**10 for i in range(60)]
+    # boundary blocks of 1, cap and cap + 1 rows; one pair shares two
+    # kept blocks, which must give one row per shared block
+    rows = [(blk, m) for blk, size in (("one", 1), ("cap", cap), ("over", cap + 1))
+            for m in rng.sample(ids, size)]
+    rows += [("s1", ids[0]), ("s1", ids[1]), ("s2", ids[1]), ("s2", ids[0]), ("s2", ids[2])]
+    rows += [(f"r{b}", m) for b in range(25) for m in rng.sample(ids, rng.randint(1, cap + 2))]
+    rng.shuffle(rows)
+    probe = rng.sample(rows, len(rows) // 3) + [r for r in rows if r[0] in ("one", "over")]
+
+    schema = f"block string, member {member_type}"
+    df = spark.createDataFrame(rows, schema)
+    kept, want = _block_pairs_reference(rows, cap)
+    assert {"cap", "s1", "s2"} <= kept and not {"one", "over"} & kept
+    assert {r[0] for r in kept_blocks(df, "block", cap).collect()} == kept
+    got = Counter(tuple(r) for r in block_pairs(df, "block", "member", cap).collect())
+    assert got == want
+    assert got[("s1", ids[0], ids[1])] == got[("s2", ids[0], ids[1])] == 1
+
+    _, want_probe = _block_pairs_reference(rows, cap, probe)
+    got_probe = block_pairs(df, "block", "member", cap, probe=spark.createDataFrame(probe, schema))
+    assert Counter(tuple(r) for r in got_probe.collect()) == want_probe
+    assert want_probe
 
 
 def test_graph_store_clear_preserves_null_session(spark, tmp_path):

@@ -110,35 +110,6 @@ def test_compact_parquet_preserves_rows_and_untouched_partitions(spark, tmp_path
     assert rep2.partitions_compacted == 0
 
 
-def test_bucketed_join_eliminates_exchange(spark, tmp_path):
-    from knowledge_graph_builder_spark.sources.bucketed import (
-        join_plan_exchanges,
-        write_bucketed,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{tmp_path}/wh'")
-    try:
-        nodes = spark.range(1000).selectExpr("id AS key", "md5(id::string) AS name")
-        edges = spark.range(5000).selectExpr(
-            "(id % 1000) AS key", "id AS edge_id"
-        )
-        write_bucketed(nodes, "bucketdb.b_nodes", "key", n_buckets=8)
-        write_bucketed(edges, "bucketdb.b_edges", "key", n_buckets=8)
-        # co-located: the equi-join on the bucket key plans ZERO shuffles
-        assert join_plan_exchanges(spark, "bucketdb.b_nodes", "bucketdb.b_edges", "key") == 0
-        # values are right too
-        out = spark.table("bucketdb.b_nodes").join(spark.table("bucketdb.b_edges"), "key")
-        assert out.count() == 5000
-        # control: the same join from raw (unbucketed) frames shuffles
-        nodes.createOrReplaceTempView("raw_nodes")
-        edges.createOrReplaceTempView("raw_edges")
-        raw = spark.table("raw_nodes").join(spark.table("raw_edges"), "key")
-        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in raw_plan
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
-
-
 def _formatted_plan(df) -> str:
     """explain("formatted"): the only rendering that shows the bucketed-
     scan decision ('Bucketed: true' vs '... disabled by query planner')."""
@@ -250,3 +221,33 @@ def test_bucketed_scan_guarded_without_session_pin(spark, tmp_path):
         for k, v in saved.items():
             spark.conf.set(k, v)
         spark.sql("DROP DATABASE IF EXISTS guarddb CASCADE")
+
+
+def test_cli_table_reads_catalog_table(spark, tmp_path, monkeypatch, capsys):
+    """``--table`` reads a catalog table through ``spark.table``: the
+    bucketed layout of SCALE.md §1, read at its bucket count, counts the
+    same rows as ``--input`` over the same transcripts."""
+    import json
+
+    from knowledge_graph_builder_spark import session
+    from knowledge_graph_builder_spark.__main__ import main
+    from knowledge_graph_builder_spark.sources.transcripts import (
+        write_transcripts_bucketed,
+    )
+
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    inp = str(tmp_path / "in")
+    golden_transcripts(spark, shuffled=True).write.parquet(inp)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS clidb LOCATION '{tmp_path}/wh'")
+    try:
+        write_transcripts_bucketed(read_transcripts(spark, inp), "clidb.transcripts", buckets=4)
+        runs = {}
+        for name, src in (("input", ["--input", inp]),
+                          ("table", ["--table", "clidb.transcripts", "--partitions", "4"])):
+            capsys.readouterr()
+            assert main([*src, "--output", str(tmp_path / name)]) == 0
+            runs[name] = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["counts"]
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS clidb CASCADE")
+    assert runs["table"] == runs["input"]
+    assert runs["input"]["triples"] == 28

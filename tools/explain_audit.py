@@ -95,6 +95,9 @@ def main(sf_dir: str) -> int:
     pw = plan_of(entry.queries()["winnow_pairs"](spark, sf_dir))
     check("winnow window is per-document", "windowspecdefinition(doc_id" in pw, pw[:400])
     check("winnow pair join is hash, not nested-loop", "CartesianProduct" not in pw)
+    pmh = plan_of(entry.queries()["minhash_neardup"](spark, sf_dir))
+    check("minhash_neardup pair join is hash, not nested-loop",
+          "CartesianProduct" not in pmh and "BroadcastNestedLoopJoin" not in pmh, pmh[:400])
 
     # 5) round-2 curation surface
     pr = plan_of(entry.queries()["redact_pii"](spark, sf_dir))
